@@ -1,0 +1,9 @@
+package org.apache.spark.perfbench
+
+import org.apache.spark.SparkContext
+
+/** Access to the listener bus, which Spark keeps package-private. The
+  * harness drains it before reading what its listeners recorded. */
+object ListenerBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
