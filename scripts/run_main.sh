@@ -15,7 +15,8 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
-exec java $ADD_OPENS \
+# ParallelGC: the collector build.sbt's forked test JVM and perfbench use
+exec java $ADD_OPENS -XX:+UseParallelGC \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" "$@"

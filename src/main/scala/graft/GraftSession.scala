@@ -14,8 +14,9 @@ import org.apache.spark.sql.SparkSession
   *  - AQE left ON (Spark default) — stage reuse, skew splits and
   *    partition coalescing are part of the verified plan shapes.
   *
-  * `Tables.load` handles the nanos-timestamp parquet quirk per read;
-  * it is not a session-level concern.
+  * `Tables.load` handles the nanos-timestamp parquet quirk per read and
+  * resolves each table's schema once per session (it caches the
+  * inferred schema per file version); neither needs session config.
   */
 object GraftSession {
 

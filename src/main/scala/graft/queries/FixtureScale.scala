@@ -17,15 +17,13 @@ import org.apache.spark.sql.SparkSession
   * floored so the planted structure (near-dup groups, degenerate
   * clusters) exists even at smoke scale.
   *
-  * The count is memoized per dir — parquet row count comes from
-  * footer metadata, but a per-rep job for a constant is still waste.
+  * The count is memoized by `Tables.rowCount` — per session and file
+  * version, under the schema cache's invalidation rule — so a rewritten
+  * lineitem resizes the corpora on its next read.
   */
 private[graft] object FixtureScale {
-  private val cache = scala.collection.concurrent.TrieMap.empty[String, Long]
-
   def lineitemRows(s: SparkSession, dir: String): Long =
-    cache.getOrElseUpdate(dir,
-      graft.Tables.load(s, dir, "lineitem").count())
+    graft.Tables.rowCount(s, dir, "lineitem")
 
   /** Formula-image corpus size (q147/q148), before the planted flat
     * cluster. Oracle twin: greatest(120, count(lineitem) // 500). */

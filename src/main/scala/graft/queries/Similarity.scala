@@ -198,6 +198,28 @@ object Similarity {
       .select(col("vec_id"), (-col("m.nc")).as("c_id"))
   }
 
+  /** The `n` lists nearest the probe (`vec_id` 0 of a [[microArr]]
+    * frame), ranked exactly like [[assignTo]]: the fused dot128 against
+    * the broadcast codebook (one row per (probe, centroid), not the
+    * k·dims join fanout), r descending, ties to the lowest c_id.
+    * assignTo's empty-vector guard runs BEFORE the dot here: an empty or
+    * NULL probe embedding ranks no list — the relational form produced
+    * no (probe, centroid) row for it — so the candidate set is empty,
+    * and dot128's length check never sees the empty array. */
+  private[graft] def probeLists(ev: DataFrame, cent: DataFrame, n: Int): DataFrame = {
+    graft.functions.GraftFunctions.register(ev.sparkSession)
+    ev.filter(col("vec_id") === 0 && size(col("varr")) > 0)
+      .crossJoin(broadcast(centArrOf(cent)))
+      .select(col("c_id"), expr("dot128(varr, sarr)").as("dot"))
+      .join(broadcast(centNorms(cent)), Seq("c_id"))
+      .withColumn("r", expr(
+        """(case when dot >= 0 then 1.0d else -1.0d end)
+           * cast(dot as double) * cast(dot as double)
+           / cast(cn2 as double)"""))
+      .orderBy(col("r").desc, col("c_id")).limit(n)
+      .select("c_id")
+  }
+
   /** q50's Lloyd loop (k = 16 seeded from the first 16 vectors):
     * `iters` assign/recompute rounds over a micro-unit long format,
     * returning the final (vec_id, c_id) assignment.
@@ -864,19 +886,7 @@ object Similarity {
         graft.operators.Parallelism.widen(microArr(e), col("vec_id")))
       val cent = lloydCentroids(ev, 3)
       val lists = graft.operators.Materialize.truncate(assignTo(ev, cent))
-      // probe ranking = the assignment's fused dot128 against the same
-      // broadcast codebook (r16, same rewrite as assignTo — one row per
-      // (probe, centroid) instead of the k·dims join fanout)
-      val pr = ev.filter(col("vec_id") === 0)
-        .crossJoin(broadcast(centArrOf(cent)))
-        .select(col("c_id"), expr("dot128(varr, sarr)").as("dot"))
-        .join(broadcast(centNorms(cent)), Seq("c_id"))
-        .withColumn("r", expr(
-          """(case when dot >= 0 then 1.0d else -1.0d end)
-             * cast(dot as double) * cast(dot as double)
-             / cast(cn2 as double)"""))
-        .orderBy(col("r").desc, col("c_id")).limit(2)
-        .select("c_id")
+      val pr = probeLists(ev, cent, 2)
       val cand = e.join(lists, Seq("vec_id"))
         .join(broadcast(pr), Seq("c_id"))
         .filter(col("vec_id") =!= 0)

@@ -1,8 +1,10 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Source/sink format coverage beyond parquet: CSV, JSON lines, ORC and
@@ -71,5 +73,97 @@ class SourcesSpec extends SparkSpec {
     // fixture texts are single-line, so line count == doc count and the
     // multiset of lines matches exactly
     assertSameRows(src.withColumnRenamed("text", "value"), back)
+  }
+
+  /** Spark jobs started while `f` runs, counted with a SparkListener.
+    * The listener bus delivers events in order, so `f`'s jobs are the
+    * ones seen between a fence job run before it and one run after. */
+  private def jobsDuring(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val seen = new LinkedBlockingQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.put(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    def fence(tag: String): Unit = {
+      sc.setJobDescription(tag)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(null)
+    }
+    def drainTo(tag: String): Int = {
+      var n = 0
+      var d = seen.poll(60, TimeUnit.SECONDS)
+      while (d != tag) {
+        assert(d != null, s"listener never saw the $tag fence job")
+        n += 1
+        d = seen.poll(60, TimeUnit.SECONDS)
+      }
+      n
+    }
+    sc.addSparkListener(l)
+    try {
+      fence("fence-before")
+      drainTo("fence-before")
+      f
+      fence("fence-after")
+      drainTo("fence-after")
+    } finally sc.removeSparkListener(l)
+  }
+
+  /** Copy a fixture table file into `dir` under the name `as`. */
+  private def copyTable(from: String, dir: String, as: String): Unit =
+    Files.copy(Paths.get(s"$sf/$from.parquet"), Paths.get(s"$dir/$as.parquet"),
+      StandardCopyOption.REPLACE_EXISTING)
+
+  test("cached schema equals an uncached read for every fixture table") {
+    // the uncached read must see the conf Tables.load sets for events
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    Tables.names.foreach { n =>
+      Tables.load(spark, sf, n) // first load: inferred and cached
+      val raw = spark.read.parquet(s"$sf/$n.parquet")
+      val want = if (n == "events") Tables.tsToTimestamp(raw) else raw
+      assert(Tables.load(spark, sf, n).schema == want.schema, n)
+    }
+  }
+
+  test("a warm Tables.load starts no Spark job") {
+    Tables.load(spark, sf, "orders")
+    assert(jobsDuring(Tables.load(spark, sf, "orders").schema) == 0)
+    // the cold load of a fresh copy is the one schema inference
+    val dir = tmp("cold")
+    copyTable("orders", dir, "orders")
+    assert(jobsDuring(Tables.load(spark, dir, "orders")) >= 1)
+    assert(jobsDuring(Tables.load(spark, dir, "orders")) == 0)
+  }
+
+  test("a rewritten table file is re-read with its new schema and rows") {
+    val dir = tmp("rewrite")
+    copyTable("lineitem", dir, "lineitem")
+    val before = Tables.load(spark, dir, "lineitem").schema
+    assert(Tables.load(spark, dir, "lineitem").schema == before)
+    val rows = Tables.load(spark, sf, "lineitem").count()
+    assert(graft.queries.FixtureScale.lineitemRows(spark, dir) == rows)
+    // a 5-row, 2-column file of a different length over the same name
+    val other = tmp("other")
+    spark.range(5).select(col("id"), (col("id") * 2).as("x"))
+      .coalesce(1).write.mode("overwrite").parquet(other)
+    val part = Files.list(Paths.get(other)).filter(
+      _.getFileName.toString.endsWith(".parquet")).findFirst().get
+    val target = Paths.get(s"$dir/lineitem.parquet")
+    assert(Files.size(part) != Files.size(target))
+    Files.copy(part, target, StandardCopyOption.REPLACE_EXISTING)
+    assert(Tables.load(spark, dir, "lineitem").columns.toSeq == Seq("id", "x"))
+    assert(graft.queries.FixtureScale.lineitemRows(spark, dir) == 5)
+  }
+
+  test("a missing table still fails with Spark's own error") {
+    val dir = tmp("missing")
+    val want = intercept[AnalysisException](
+      spark.read.parquet(s"$dir/region.parquet"))
+    val got = intercept[AnalysisException](Tables.load(spark, dir, "region"))
+    assert(got.getCondition == want.getCondition, got.getMessage)
+    assert(got.getMessage == want.getMessage)
   }
 }

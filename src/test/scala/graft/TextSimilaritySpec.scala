@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Invariant checks for text-analysis and similarity queries over the
@@ -377,6 +378,26 @@ class TextSimilaritySpec extends SparkSpec {
     info(s"recall: learned-2 ${lp.getLong(0)}/5 @ ${lp.getLong(2)} " +
       s"scanned; static-5 ${mp.getLong(0)}/5 @ ${mp.getLong(2)}; " +
       s"static-1 ${sp.getLong(0)}/5")
+  }
+
+  test("q140 probe ranking: an empty or NULL probe embedding ranks no " +
+      "list, so the candidate set is empty") {
+    // a 2-dim codebook of 3 centroids in q50's long (c_id, pos, si) form
+    val cent = Seq((0L, 0, 5L), (0L, 1, 3L), (1L, 0, -2L), (1L, 1, 7L),
+      (2L, 0, 1L), (2L, 1, 1L)).toDF("c_id", "pos", "si")
+    val lists = Seq((3L, 0L), (4L, 1L), (5L, 2L)).toDF("vec_id", "c_id")
+    def probed(probe: Seq[Long]): DataFrame = {
+      val ev = Seq((0L, probe), (1L, Seq(1L, 2L))).toDF("vec_id", "varr")
+      val pr = graft.queries.Similarity.probeLists(ev, cent, 2)
+      lists.join(pr, "c_id")
+    }
+    // control: a real probe picks 2 lists by the exact ranking
+    // (r = dot^2/cn2: c2 -> 9/2, c0 -> 121/34, c1 -> 144/53)
+    assert(probed(Seq(1L, 2L)).select("c_id").as[Long].collect().toSet ==
+      Set(0L, 2L))
+    assert(probed(Seq.empty).isEmpty,
+      "an empty probe must rank no list (the relational form had no row)")
+    assert(probed(null).isEmpty, "a NULL probe must rank no list")
   }
 
   test("q74's exact-top-10 precondition holds on the fixture " +
