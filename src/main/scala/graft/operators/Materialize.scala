@@ -16,6 +16,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * which survives executor loss. The knob is a session conf rather than
   * a parameter because the driver contract fixes query signatures to
   * `(SparkSession, dir) => DataFrame`.
+  *
+  * The reliable `checkpoint()` is eager: one write job computes the
+  * subtree once and later actions read the files, so no persist is
+  * needed first (DedupSpec counts the evaluations).
   */
 object Materialize {
 

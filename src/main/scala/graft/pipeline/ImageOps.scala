@@ -1,8 +1,9 @@
 package graft.pipeline
 
-import java.awt.image.BufferedImage
+import java.awt.image.{BufferedImage, DataBufferInt}
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import javax.imageio.{IIOImage, ImageIO, ImageWriteParam}
+import scala.util.control.NonFatal
 
 /** In-memory image record mirroring Spark's image-source struct and the
   * reference's row layout (reference: src/piper/spark/data_augment.py:42-60):
@@ -14,8 +15,8 @@ case class ImageRecord(origin: String, height: Int, width: Int,
 
 /** Pure scalar image ops (reference rows A8-A22 in SURVEY.md §2-A),
   * deterministic under fixed seeds. These run inside Dataset.map /
-  * mapPartitions on executors — each op is O(pixels) with no allocation
-  * beyond the output buffer, so throughput scales with partition count.
+  * mapPartitions on executors — each op is O(pixels) with no per-pixel
+  * allocation, so throughput scales with partition count.
   */
 object ImageOps {
 
@@ -62,7 +63,7 @@ object ImageOps {
         }
         Some(ImageRecord(origin, h, w, 3, 16, out))
       }
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   /** A9: area-interpolation resize (cv2.INTER_AREA analog): each output
     * pixel averages the exact (fractionally weighted) source area it
@@ -70,31 +71,77 @@ object ImageOps {
     * on upscale, matching INTER_AREA's behavior. */
   def resizeArea(rec: ImageRecord, tw: Int, th: Int): ImageRecord = {
     val (h, w, c) = (rec.height, rec.width, rec.nChannels)
+    val src = rec.data
     val out = new Array[Byte](th * tw * c)
     val sy = h.toDouble / th
     val sx = w.toDouble / tw
+    // Each output column's source span [xs, xe) and its x-weights, laid
+    // out back to back from wOff(ox), built once per call. Weights and
+    // sums are the same double expressions, summed in the same order, as
+    // a per-pixel, per-channel evaluation, so the bytes are identical
+    // (ImagePipelineSpec compares the two).
+    val nx = math.max(tw, 0)
+    val xs = new Array[Int](nx); val xe = new Array[Int](nx)
+    val wOff = new Array[Int](nx + 1)
+    var ox = 0
+    while (ox < nx) {
+      xs(ox) = math.floor(ox * sx).toInt
+      xe(ox) = math.min(math.ceil((ox + 1) * sx), w).toInt
+      wOff(ox + 1) = wOff(ox) + math.max(0, xe(ox) - xs(ox))
+      ox += 1
+    }
+    val wxs = new Array[Double](wOff(nx))
+    ox = 0
+    while (ox < nx) {
+      val x0 = ox * sx; val x1 = (ox + 1) * sx
+      var xx = xs(ox)
+      while (xx < xe(ox)) {
+        wxs(wOff(ox) + xx - xs(ox)) = math.min(x1, xx + 1) - math.max(x0, xx)
+        xx += 1
+      }
+      ox += 1
+    }
+    val wys = new Array[Double](math.max(h, 0))
+    val acc = new Array[Double](c)
     var oy = 0
     while (oy < th) {
+      // this output row's span [ys, ys + ny) and its y-weights
       val y0 = oy * sy; val y1 = (oy + 1) * sy
-      var ox = 0
+      val ys = math.floor(y0).toInt
+      val ny = math.max(0, math.min(math.ceil(y1), h).toInt - ys)
+      var j = 0
+      while (j < ny) {
+        val yy = ys + j
+        wys(j) = math.min(y1, yy + 1) - math.max(y0, yy)
+        j += 1
+      }
+      ox = 0
       while (ox < tw) {
-        val x0 = ox * sx; val x1 = (ox + 1) * sx
+        val xb = xs(ox); val xn = xe(ox) - xb; val wo = wOff(ox)
+        java.util.Arrays.fill(acc, 0.0)
+        var area = 0.0
+        j = 0
+        while (j < ny) {
+          val wy = wys(j)
+          var p = ((ys + j) * w + xb) * c
+          var k = 0
+          while (k < xn) {
+            val wx = wxs(wo + k)
+            var ch = 0
+            while (ch < c) {
+              acc(ch) += u(src(p + ch)) * wy * wx
+              ch += 1
+            }
+            area += wy * wx
+            p += c
+            k += 1
+          }
+          j += 1
+        }
+        val o = (oy * tw + ox) * c
         var ch = 0
         while (ch < c) {
-          var acc = 0.0; var area = 0.0
-          var yy = math.floor(y0).toInt
-          while (yy < math.min(math.ceil(y1), h)) {
-            val wy = math.min(y1, yy + 1) - math.max(y0, yy)
-            var xx = math.floor(x0).toInt
-            while (xx < math.min(math.ceil(x1), w)) {
-              val wx = math.min(x1, xx + 1) - math.max(x0, xx)
-              acc += u(rec.data((yy * w + xx) * c + ch)) * wy * wx
-              area += wy * wx
-              xx += 1
-            }
-            yy += 1
-          }
-          out((oy * tw + ox) * c + ch) = clampByte(acc / area)
+          out(o + ch) = clampByte(acc(ch) / area)
           ch += 1
         }
         ox += 1
@@ -153,31 +200,34 @@ object ImageOps {
     * sampling, black fill (reference: fixed 15 deg / random uniform). */
   def rotate(rec: ImageRecord, degrees: Double): ImageRecord = {
     val (h, w, c) = (rec.height, rec.width, rec.nChannels)
-    val out = new Array[Byte](rec.data.length)
+    val src = rec.data
+    val out = new Array[Byte](src.length)
     val rad = math.toRadians(degrees)
     val cosA = math.cos(rad); val sinA = math.sin(rad)
     val cy = (h - 1) / 2.0; val cx = (w - 1) / 2.0
     var y = 0
     while (y < h) {
+      val dy = y - cy
+      val sinDy = sinA * dy; val cosDy = cosA * dy
       var x = 0
       while (x < w) {
         // inverse mapping: dst -> src
-        val dx = x - cx; val dy = y - cy
-        val sxf = cosA * dx + sinA * dy + cx
-        val syf = -sinA * dx + cosA * dy + cy
+        val dx = x - cx
+        val sxf = cosA * dx + sinDy + cx
+        val syf = -sinA * dx + cosDy + cy
         if (sxf >= 0 && sxf <= w - 1 && syf >= 0 && syf <= h - 1) {
           val x0 = sxf.toInt; val y0 = syf.toInt
           val x1 = math.min(x0 + 1, w - 1); val y1 = math.min(y0 + 1, h - 1)
           val fx = sxf - x0; val fy = syf - y0
+          val gx = 1 - fx; val gy = 1 - fy
+          val i00 = (y0 * w + x0) * c; val i01 = (y0 * w + x1) * c
+          val i10 = (y1 * w + x0) * c; val i11 = (y1 * w + x1) * c
+          val o = (y * w + x) * c
           var ch = 0
           while (ch < c) {
-            val v00 = u(rec.data((y0 * w + x0) * c + ch))
-            val v01 = u(rec.data((y0 * w + x1) * c + ch))
-            val v10 = u(rec.data((y1 * w + x0) * c + ch))
-            val v11 = u(rec.data((y1 * w + x1) * c + ch))
-            val v = v00 * (1 - fx) * (1 - fy) + v01 * fx * (1 - fy) +
-              v10 * (1 - fx) * fy + v11 * fx * fy
-            out((y * w + x) * c + ch) = clampByte(v)
+            val v = u(src(i00 + ch)) * gx * gy + u(src(i01 + ch)) * fx * gy +
+              u(src(i10 + ch)) * gx * fy + u(src(i11 + ch)) * fx * fy
+            out(o + ch) = clampByte(v)
             ch += 1
           }
         }
@@ -192,10 +242,17 @@ object ImageOps {
     * (cv2.convertScaleAbs analog; reference alpha=1.2, beta=10). */
   def colorJitter(rec: ImageRecord, alpha: Double = 1.2,
       beta: Double = 10.0): ImageRecord = {
-    val out = new Array[Byte](rec.data.length)
+    val lut = new Array[Byte](256)
+    var v = 0
+    while (v < 256) {
+      lut(v) = clampByte(alpha * v + beta)
+      v += 1
+    }
+    val src = rec.data
+    val out = new Array[Byte](src.length)
     var i = 0
     while (i < out.length) {
-      out(i) = clampByte(alpha * u(rec.data(i)) + beta)
+      out(i) = lut(u(src(i)))
       i += 1
     }
     rec.copy(data = out)
@@ -306,19 +363,15 @@ object ImageOps {
   def toBufferedImage(rec: ImageRecord): BufferedImage = {
     val img = new BufferedImage(rec.width, rec.height,
       BufferedImage.TYPE_INT_RGB)
-    val c = rec.nChannels
-    var y = 0
-    while (y < rec.height) {
-      var x = 0
-      while (x < rec.width) {
-        val i = (y * rec.width + x) * c
-        val (b, g, r) =
-          if (c >= 3) (u(rec.data(i)), u(rec.data(i + 1)), u(rec.data(i + 2)))
-          else { val v = u(rec.data(i)); (v, v, v) }
-        img.setRGB(x, y, (r << 16) | (g << 8) | b)
-        x += 1
-      }
-      y += 1
+    // packed 0x00RRGGBB straight into the raster (row stride = width)
+    val px = img.getRaster.getDataBuffer.asInstanceOf[DataBufferInt].getData
+    val (src, c) = (rec.data, rec.nChannels)
+    var p = 0; var i = 0
+    while (p < px.length) {
+      px(p) =
+        if (c >= 3) (u(src(i + 2)) << 16) | (u(src(i + 1)) << 8) | u(src(i))
+        else { val v = u(src(i)); (v << 16) | (v << 8) | v }
+      p += 1; i += c
     }
     img
   }

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Dataset-level pipeline operators giving the reference's end-to-end
   * image ETL (SURVEY.md §2-A A1/A5/A14/A23-A33) an idiomatic Spark shape:
@@ -69,7 +70,7 @@ object ImagePipeline {
           val jittered = ImageOps.colorJitter(rotated)
           (rec.origin, ImageOps.jpegEncode(jittered))
         }
-      } catch { case _: Throwable => None }
+      } catch { case NonFatal(_) => None }
     }
   }
 

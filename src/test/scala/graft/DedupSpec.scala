@@ -208,6 +208,44 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("reliable Materialize.truncate computes its subtree exactly once") {
+    // An eager Dataset.checkpoint writes the checkpoint in one job
+    // (RDD.doCheckpoint) and runs no separate count, so the reliable path
+    // needs no persist-first: a counting nondeterministic UDF sees each
+    // of the 1000 rows once, and later actions read the checkpoint files.
+    // A LAZY checkpoint is different: its first action computes the rows
+    // and the write job computes them again — the case
+    // ConnectedComponents persists for.
+    val key = graft.operators.Materialize.ReliableKey
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-once")
+    spark.sparkContext.setCheckpointDir(dir.toString)
+    spark.conf.set(key, "true")
+    try {
+      def counted(name: String) = {
+        val acc = spark.sparkContext.longAccumulator(name)
+        val tick = udf { (x: Long) => acc.add(1); x }.asNondeterministic()
+        (acc, spark.range(1000).select(tick(col("id")).as("id")))
+      }
+      val (acc, df) = counted("truncate-evals")
+      val out = graft.operators.Materialize.truncate(df)
+      assert(acc.value == 1000L,
+        "the eager reliable checkpoint ran the subtree more than once")
+      assert(out.count() == 1000L)
+      assert(out.agg(sum("id")).head().getLong(0) == 999L * 1000L / 2)
+      assert(acc.value == 1000L,
+        "actions on the truncated frame recomputed the subtree")
+
+      val (lazyAcc, lazyDf) = counted("lazy-checkpoint-evals")
+      val lazyOut = lazyDf.checkpoint(eager = false)
+      assert(lazyOut.count() == 1000L)
+      assert(lazyAcc.value == 2000L,
+        "a lazy reliable checkpoint's first action computes the rows twice")
+    } finally {
+      spark.conf.unset(key)
+      spark.sparkContext.setCheckpointDir(null)
+    }
+  }
+
   test("jaccard dfCap: a viral stop-shingle cannot explode pair count") {
     // 300 docs share exactly one shingle ("h1 h2 h3"); every other
     // shingle is unique per doc. Uncapped this is 300*299/2 = 44850

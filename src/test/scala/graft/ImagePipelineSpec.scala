@@ -101,6 +101,44 @@ class ImagePipelineSpec extends SparkSpec {
     assert(maxErr <= 24, s"q95 roundtrip error too large: $maxErr")
   }
 
+  test("kernels are bit-exact against the per-pixel reference bodies") {
+    import ImageOpsReference._
+    val rnd = new scala.util.Random(20260418L)
+    def img(h: Int, w: Int, c: Int): ImageRecord =
+      ImageRecord(s"mem://r${h}x${w}x$c", h, w, c, 16,
+        Array.fill(h * w * c)(rnd.nextInt(256).toByte))
+    val shapes = Seq.fill(30)((1 + rnd.nextInt(64), 1 + rnd.nextInt(64))) ++
+      Seq((1, 1), (1, 64), (64, 1), (452, 480))
+    val images = for ((h, w) <- shapes; c <- Seq(1, 3, 4)) yield img(h, w, c)
+    def same(what: String, r: ImageRecord, a: Array[Byte], b: Array[Byte]) =
+      assert(a.sameElements(b),
+        s"$what differs on ${r.height}x${r.width}x${r.nChannels}")
+    for (r <- images) {
+      // upscale (x2 + 3), downscale (/2 floor), non-integer ratio, 1x1,
+      // and the degenerate sizes the img_resize UDF lets through
+      val targets = Seq((r.width * 2 + 3, r.height * 2 + 3),
+        (math.max(1, r.width / 2), math.max(1, r.height / 2)),
+        (17, 31), (224, 224), (1, 1), (0, 3), (3, 0), (-2, -3))
+      for ((tw, th) <- targets) {
+        val got = ImageOps.resizeArea(r, tw, th)
+        assert(got.width == tw && got.height == th)
+        same(s"resizeArea($tw, $th)", r, got.data, resizeArea(r, tw, th).data)
+      }
+      for (deg <- Seq(15.0, -33.0, 90.0))
+        same(s"rotate($deg)", r, ImageOps.rotate(r, deg).data,
+          rotate(r, deg).data)
+      same("colorJitter()", r, ImageOps.colorJitter(r).data,
+        colorJitter(r).data)
+      same("colorJitter(1.0, 20.0)", r,
+        ImageOps.colorJitter(r, 1.0, 20.0).data, colorJitter(r, 1.0, 20.0).data)
+      val (ours, ref) = (ImageOps.toBufferedImage(r), toBufferedImage(r))
+      assert(ours.getRGB(0, 0, r.width, r.height, null, 0, r.width)
+        .sameElements(ref.getRGB(0, 0, r.width, r.height, null, 0, r.width)))
+      same("jpegEncode", r, ImageOps.jpegEncode(r), jpegEncode(r))
+      same("pngEncode", r, ImageOps.pngEncode(r), pngEncode(r))
+    }
+  }
+
   // ------------------------------------------------ dHash (q147/q148)
 
   test("dhash64: hand-computed grids, channel paths, null degradation") {
@@ -1268,5 +1306,143 @@ class ImagePipelineSpec extends SparkSpec {
     val again = Multimodal.audioFeatures(spark, media, nSeg = 4)
       .head().getSeq[Float](1)
     assert(again == e)
+  }
+}
+
+/** The image kernels as they were before the table/span rewrite, kept
+  * verbatim as the reference for the bit-exactness test: one double
+  * expression per pixel and channel, one `setRGB` per pixel. */
+private object ImageOpsReference {
+  import java.awt.image.BufferedImage
+  import java.io.ByteArrayOutputStream
+  import javax.imageio.{IIOImage, ImageIO, ImageWriteParam}
+
+  @inline private def clampByte(v: Double): Byte =
+    math.max(0, math.min(255, math.round(v))).toByte
+
+  @inline private def u(b: Byte): Int = b & 0xff
+
+  def resizeArea(rec: ImageRecord, tw: Int, th: Int): ImageRecord = {
+    val (h, w, c) = (rec.height, rec.width, rec.nChannels)
+    val out = new Array[Byte](th * tw * c)
+    val sy = h.toDouble / th
+    val sx = w.toDouble / tw
+    var oy = 0
+    while (oy < th) {
+      val y0 = oy * sy; val y1 = (oy + 1) * sy
+      var ox = 0
+      while (ox < tw) {
+        val x0 = ox * sx; val x1 = (ox + 1) * sx
+        var ch = 0
+        while (ch < c) {
+          var acc = 0.0; var area = 0.0
+          var yy = math.floor(y0).toInt
+          while (yy < math.min(math.ceil(y1), h)) {
+            val wy = math.min(y1, yy + 1) - math.max(y0, yy)
+            var xx = math.floor(x0).toInt
+            while (xx < math.min(math.ceil(x1), w)) {
+              val wx = math.min(x1, xx + 1) - math.max(x0, xx)
+              acc += u(rec.data((yy * w + xx) * c + ch)) * wy * wx
+              area += wy * wx
+              xx += 1
+            }
+            yy += 1
+          }
+          out((oy * tw + ox) * c + ch) = clampByte(acc / area)
+          ch += 1
+        }
+        ox += 1
+      }
+      oy += 1
+    }
+    rec.copy(height = th, width = tw, data = out)
+  }
+
+  def rotate(rec: ImageRecord, degrees: Double): ImageRecord = {
+    val (h, w, c) = (rec.height, rec.width, rec.nChannels)
+    val out = new Array[Byte](rec.data.length)
+    val rad = math.toRadians(degrees)
+    val cosA = math.cos(rad); val sinA = math.sin(rad)
+    val cy = (h - 1) / 2.0; val cx = (w - 1) / 2.0
+    var y = 0
+    while (y < h) {
+      var x = 0
+      while (x < w) {
+        // inverse mapping: dst -> src
+        val dx = x - cx; val dy = y - cy
+        val sxf = cosA * dx + sinA * dy + cx
+        val syf = -sinA * dx + cosA * dy + cy
+        if (sxf >= 0 && sxf <= w - 1 && syf >= 0 && syf <= h - 1) {
+          val x0 = sxf.toInt; val y0 = syf.toInt
+          val x1 = math.min(x0 + 1, w - 1); val y1 = math.min(y0 + 1, h - 1)
+          val fx = sxf - x0; val fy = syf - y0
+          var ch = 0
+          while (ch < c) {
+            val v00 = u(rec.data((y0 * w + x0) * c + ch))
+            val v01 = u(rec.data((y0 * w + x1) * c + ch))
+            val v10 = u(rec.data((y1 * w + x0) * c + ch))
+            val v11 = u(rec.data((y1 * w + x1) * c + ch))
+            val v = v00 * (1 - fx) * (1 - fy) + v01 * fx * (1 - fy) +
+              v10 * (1 - fx) * fy + v11 * fx * fy
+            out((y * w + x) * c + ch) = clampByte(v)
+            ch += 1
+          }
+        }
+        x += 1
+      }
+      y += 1
+    }
+    rec.copy(data = out)
+  }
+
+  def colorJitter(rec: ImageRecord, alpha: Double = 1.2,
+      beta: Double = 10.0): ImageRecord = {
+    val out = new Array[Byte](rec.data.length)
+    var i = 0
+    while (i < out.length) {
+      out(i) = clampByte(alpha * u(rec.data(i)) + beta)
+      i += 1
+    }
+    rec.copy(data = out)
+  }
+
+  def jpegEncode(rec: ImageRecord, quality: Float = 0.95f): Array[Byte] = {
+    val img = toBufferedImage(rec)
+    val writer = ImageIO.getImageWritersByFormatName("jpg").next()
+    val params = writer.getDefaultWriteParam
+    params.setCompressionMode(ImageWriteParam.MODE_EXPLICIT)
+    params.setCompressionQuality(quality)
+    val bos = new ByteArrayOutputStream()
+    val ios = ImageIO.createImageOutputStream(bos)
+    writer.setOutput(ios)
+    writer.write(null, new IIOImage(img, null, null), params)
+    writer.dispose(); ios.close()
+    bos.toByteArray
+  }
+
+  def pngEncode(rec: ImageRecord): Array[Byte] = {
+    val bos = new ByteArrayOutputStream()
+    ImageIO.write(toBufferedImage(rec), "png", bos)
+    bos.toByteArray
+  }
+
+  def toBufferedImage(rec: ImageRecord): BufferedImage = {
+    val img = new BufferedImage(rec.width, rec.height,
+      BufferedImage.TYPE_INT_RGB)
+    val c = rec.nChannels
+    var y = 0
+    while (y < rec.height) {
+      var x = 0
+      while (x < rec.width) {
+        val i = (y * rec.width + x) * c
+        val (b, g, r) =
+          if (c >= 3) (u(rec.data(i)), u(rec.data(i + 1)), u(rec.data(i + 2)))
+          else { val v = u(rec.data(i)); (v, v, v) }
+        img.setRGB(x, y, (r << 16) | (g << 8) | b)
+        x += 1
+      }
+      y += 1
+    }
+    img
   }
 }
