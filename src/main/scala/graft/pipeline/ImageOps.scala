@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import java.awt.image.{BufferedImage, DataBufferInt}
+import java.awt.color.ColorSpace
+import java.awt.image.{BufferedImage, DataBufferByte, DataBufferInt, PixelInterleavedSampleModel}
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import javax.imageio.{IIOImage, ImageIO, ImageWriteParam}
 import scala.util.control.NonFatal
@@ -39,37 +40,123 @@ object ImageOps {
     else decodeEncoded(rec.origin, rec.data)
   }
 
-  /** Decode an encoded (jpeg/png/bmp/gif) byte stream to a BGR record. */
+  /** Decode an encoded (jpeg/png/bmp/gif) byte stream to a 3-channel BGR
+    * record, whatever the source's channels (gray and alpha included). */
   def decodeEncoded(origin: String, bytes: Array[Byte]): Option[ImageRecord] =
     try {
       val img = ImageIO.read(new ByteArrayInputStream(bytes))
       if (img == null) None
       else {
-        val h = img.getHeight
-        val w = img.getWidth
+        val (h, w) = (img.getHeight, img.getWidth)
         val out = new Array[Byte](h * w * 3)
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            val rgb = img.getRGB(x, y)
-            val i = (y * w + x) * 3
-            out(i) = (rgb & 0xff).toByte             // B
-            out(i + 1) = ((rgb >> 8) & 0xff).toByte  // G
-            out(i + 2) = ((rgb >> 16) & 0xff).toByte // R
-            x += 1
-          }
-          y += 1
-        }
+        readBgr(img, out, 3)
         Some(ImageRecord(origin, h, w, 3, 16, out))
       }
     } catch { case NonFatal(_) => None }
 
+  /** The image source's decode (A1): the record Spark's
+    * `ImageSchema.decode` builds, byte for byte. Gray images give one
+    * channel (mode CV_8UC1 = 0) holding the low byte of each raster
+    * sample; images with alpha give BGRA (CV_8UC4 = 24); everything else
+    * BGR (CV_8UC3 = 16). Spark reads one `getRGB` (or `getSample`) and
+    * allocates one `java.awt.Color` per pixel; this reads whole rows, or
+    * copies the raster array outright for plain 8-bit sRGB layouts.
+    *
+    * One difference on purpose: Spark treats any `Throwable` from
+    * `ImageIO.read` as an undecodable file; this drops only `NonFatal`
+    * ones, so an OOM or an interrupt fails the task instead. */
+  def decodeImage(origin: String, bytes: Array[Byte]): Option[ImageRecord] = {
+    val img = try ImageIO.read(new ByteArrayInputStream(bytes))
+      catch { case NonFatal(_) => null }
+    if (img == null) return None
+    val cm = img.getColorModel
+    val isGray = cm.getColorSpace.getType == ColorSpace.TYPE_GRAY
+    val (h, w) = (img.getHeight, img.getWidth)
+    val (c, mode) = if (isGray) (1, 0) else if (cm.hasAlpha) (4, 24) else (3, 16)
+    val size = h * w * c
+    assert(size < 1e9, "image is too large") // Spark's guard, Int product included
+    val out = new Array[Byte](size)
+    if (isGray) {
+      val raster = img.getRaster
+      val row = new Array[Int](w)
+      var y = 0
+      while (y < h) {
+        raster.getSamples(0, y, w, 1, 0, row)
+        var x = 0
+        while (x < w) { out(y * w + x) = row(x).toByte; x += 1 }
+        y += 1
+      }
+    } else readBgr(img, out, c)
+    Some(ImageRecord(origin, h, w, c, mode, out))
+  }
+
+  /** Fill `out` with `img`'s pixels as B, G, R (c = 3) or B, G, R, A
+    * (c = 4; the source must then have alpha), exactly the bytes of
+    * `img.getRGB(x, y)`. The two common 8-bit sRGB raster layouts are
+    * copied straight from the raster array; any other image goes through
+    * `getRGB` one row at a time. */
+  private def readBgr(img: BufferedImage, out: Array[Byte], c: Int): Unit = {
+    val (h, w) = (img.getHeight, img.getWidth)
+    val t = img.getType
+    val src =
+      if (t == BufferedImage.TYPE_3BYTE_BGR || t == BufferedImage.TYPE_4BYTE_ABGR)
+        plainBytes(img)
+      else null
+    if (src != null && t == BufferedImage.TYPE_3BYTE_BGR)
+      System.arraycopy(src, 0, out, 0, h * w * 3)
+    else if (src != null) {
+      var i = 0; var o = 0
+      while (o < out.length) { // A B G R -> B G R (A)
+        out(o) = src(i + 1); out(o + 1) = src(i + 2); out(o + 2) = src(i + 3)
+        if (c == 4) out(o + 3) = src(i)
+        i += 4; o += c
+      }
+    } else {
+      val row = new Array[Int](w)
+      var o = 0
+      var y = 0
+      while (y < h) {
+        img.getRGB(0, y, w, 1, row, 0, w)
+        var x = 0
+        while (x < w) {
+          val p = row(x)
+          out(o) = p.toByte; out(o + 1) = (p >> 8).toByte
+          out(o + 2) = (p >> 16).toByte
+          if (c == 4) out(o + 3) = (p >>> 24).toByte
+          o += c; x += 1
+        }
+        y += 1
+      }
+    }
+  }
+
+  /** The raster's byte array when `getRGB` reads it verbatim: sRGB color
+    * space, one bank, no offset or translation, pixels interleaved at
+    * stride w·bands with no row padding; null otherwise. */
+  private def plainBytes(img: BufferedImage): Array[Byte] = {
+    val raster = img.getRaster
+    (raster.getDataBuffer, raster.getSampleModel) match {
+      case (db: DataBufferByte, sm: PixelInterleavedSampleModel)
+          if img.getColorModel.getColorSpace.isCS_sRGB &&
+            db.getNumBanks == 1 && db.getOffset == 0 &&
+            raster.getSampleModelTranslateX == 0 &&
+            raster.getSampleModelTranslateY == 0 &&
+            sm.getPixelStride == sm.getNumBands &&
+            sm.getScanlineStride == img.getWidth * sm.getNumBands =>
+        db.getData
+      case _ => null
+    }
+  }
+
   /** A9: area-interpolation resize (cv2.INTER_AREA analog): each output
     * pixel averages the exact (fractionally weighted) source area it
     * covers — correct for downscale; degenerates to bilinear-ish smoothing
-    * on upscale, matching INTER_AREA's behavior. */
+    * on upscale, matching INTER_AREA's behavior. A zero target size gives
+    * an empty image; a negative one throws, naming the record's origin. */
   def resizeArea(rec: ImageRecord, tw: Int, th: Int): ImageRecord = {
+    if (tw < 0 || th < 0) throw new IllegalArgumentException(
+      s"resizeArea: negative target size (width $tw, height $th) " +
+        s"for origin ${rec.origin}")
     val (h, w, c) = (rec.height, rec.width, rec.nChannels)
     val src = rec.data
     val out = new Array[Byte](th * tw * c)
@@ -80,19 +167,18 @@ object ImageOps {
     // sums are the same double expressions, summed in the same order, as
     // a per-pixel, per-channel evaluation, so the bytes are identical
     // (ImagePipelineSpec compares the two).
-    val nx = math.max(tw, 0)
-    val xs = new Array[Int](nx); val xe = new Array[Int](nx)
-    val wOff = new Array[Int](nx + 1)
+    val xs = new Array[Int](tw); val xe = new Array[Int](tw)
+    val wOff = new Array[Int](tw + 1)
     var ox = 0
-    while (ox < nx) {
+    while (ox < tw) {
       xs(ox) = math.floor(ox * sx).toInt
       xe(ox) = math.min(math.ceil((ox + 1) * sx), w).toInt
       wOff(ox + 1) = wOff(ox) + math.max(0, xe(ox) - xs(ox))
       ox += 1
     }
-    val wxs = new Array[Double](wOff(nx))
+    val wxs = new Array[Double](wOff(tw))
     ox = 0
-    while (ox < nx) {
+    while (ox < tw) {
       val x0 = ox * sx; val x1 = (ox + 1) * sx
       var xx = xs(ox)
       while (xx < xe(ox)) {

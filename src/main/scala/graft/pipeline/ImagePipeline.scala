@@ -17,13 +17,15 @@ import scala.util.control.NonFatal
   */
 object ImagePipeline {
 
-  /** A1 exact: Spark's built-in `image` source — one row per image file
-    * with the (origin, height, width, nChannels, mode, data[BGR]) struct,
-    * undecodable files dropped, recursive lookup. Identical call shape to
-    * the reference (data_augment.py:115-120). */
+  /** A1 exact: one row per image file with Spark's image struct
+    * (origin, height, width, nChannels, mode, data[BGR]), undecodable
+    * files dropped, recursive lookup — the reference's
+    * `format("image").option("dropInvalid", true)` read
+    * (data_augment.py:115-120). The scan is `ImageSource`, which decodes
+    * pixels in bulk; `UtilOpsSpec` pins its rows to Spark's own image
+    * source field by field. */
   def readImageDir(spark: SparkSession, dir: String): DataFrame =
-    spark.read.format("image")
-      .option("dropInvalid", "true")
+    spark.read.format(classOf[ImageSource].getName)
       .option("recursiveFileLookup", "true")
       .load(dir)
 

@@ -115,14 +115,19 @@ class ImagePipelineSpec extends SparkSpec {
         s"$what differs on ${r.height}x${r.width}x${r.nChannels}")
     for (r <- images) {
       // upscale (x2 + 3), downscale (/2 floor), non-integer ratio, 1x1,
-      // and the degenerate sizes the img_resize UDF lets through
+      // the empty sizes, and a negative size, which must throw
       val targets = Seq((r.width * 2 + 3, r.height * 2 + 3),
         (math.max(1, r.width / 2), math.max(1, r.height / 2)),
         (17, 31), (224, 224), (1, 1), (0, 3), (3, 0), (-2, -3))
       for ((tw, th) <- targets) {
-        val got = ImageOps.resizeArea(r, tw, th)
-        assert(got.width == tw && got.height == th)
-        same(s"resizeArea($tw, $th)", r, got.data, resizeArea(r, tw, th).data)
+        if (tw < 0 || th < 0) {
+          val e = intercept[IllegalArgumentException](ImageOps.resizeArea(r, tw, th))
+          assert(e.getMessage.contains(r.origin))
+        } else {
+          val got = ImageOps.resizeArea(r, tw, th)
+          assert(got.width == tw && got.height == th)
+          same(s"resizeArea($tw, $th)", r, got.data, resizeArea(r, tw, th).data)
+        }
       }
       for (deg <- Seq(15.0, -33.0, 90.0))
         same(s"rotate($deg)", r, ImageOps.rotate(r, deg).data,
@@ -137,6 +142,33 @@ class ImagePipelineSpec extends SparkSpec {
       same("jpegEncode", r, ImageOps.jpegEncode(r), jpegEncode(r))
       same("pngEncode", r, ImageOps.pngEncode(r), pngEncode(r))
     }
+  }
+
+  test("decodeEncoded is bit-exact against the per-pixel getRGB reference") {
+    val layouts = ImageLayouts.encoded(20260419L) ++
+      ImageLayouts.encoded(7L, w = 64, h = 33)
+    for ((name, bytes) <- layouts) {
+      val got = ImageOps.decodeEncoded(s"mem://$name", bytes).get
+      val want = ImageOpsReference.decodeEncoded(s"mem://$name", bytes).get
+      assert(got.copy(data = null) == want.copy(data = null), name)
+      assert(got.nChannels == 3 && got.data.sameElements(want.data), name)
+    }
+    assert(ImageOps.decodeEncoded("mem://junk", Array[Byte](1, 2, 3)).isEmpty)
+  }
+
+  test("img_resize rejects a negative target size, naming the row") {
+    graft.pipeline.ImageUDFs.register(spark)
+    val g = gradient(8, 8)
+    Seq((g.data, g.height, g.width, g.nChannels)).toDF("d", "h", "w", "c")
+      .createOrReplaceTempView("imgs_neg")
+    val e = intercept[Exception](spark.sql(
+      "SELECT img_resize(d, h, w, c, -2, -3) FROM imgs_neg").collect())
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+    assert(causes.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+      c.getMessage == "resizeArea: negative target size (width -3, height -2) " +
+        "for origin udf"), e)
+    assert(spark.sql("SELECT img_resize(d, h, w, c, 0, 3) FROM imgs_neg")
+      .head().getAs[Array[Byte]](0).isEmpty, "zero sizes stay allowed")
   }
 
   // ------------------------------------------------ dHash (q147/q148)
@@ -1309,18 +1341,45 @@ class ImagePipelineSpec extends SparkSpec {
   }
 }
 
-/** The image kernels as they were before the table/span rewrite, kept
-  * verbatim as the reference for the bit-exactness test: one double
-  * expression per pixel and channel, one `setRGB` per pixel. */
+/** The image kernels as they were before the table/span and bulk-pixel
+  * rewrites, kept verbatim as the reference for the bit-exactness tests:
+  * one double expression per pixel and channel, one `setRGB` or `getRGB`
+  * per pixel. */
 private object ImageOpsReference {
   import java.awt.image.BufferedImage
-  import java.io.ByteArrayOutputStream
+  import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
   import javax.imageio.{IIOImage, ImageIO, ImageWriteParam}
+  import scala.util.control.NonFatal
 
   @inline private def clampByte(v: Double): Byte =
     math.max(0, math.min(255, math.round(v))).toByte
 
   @inline private def u(b: Byte): Int = b & 0xff
+
+  def decodeEncoded(origin: String, bytes: Array[Byte]): Option[ImageRecord] =
+    try {
+      val img = ImageIO.read(new ByteArrayInputStream(bytes))
+      if (img == null) None
+      else {
+        val h = img.getHeight
+        val w = img.getWidth
+        val out = new Array[Byte](h * w * 3)
+        var y = 0
+        while (y < h) {
+          var x = 0
+          while (x < w) {
+            val rgb = img.getRGB(x, y)
+            val i = (y * w + x) * 3
+            out(i) = (rgb & 0xff).toByte             // B
+            out(i + 1) = ((rgb >> 8) & 0xff).toByte  // G
+            out(i + 2) = ((rgb >> 16) & 0xff).toByte // R
+            x += 1
+          }
+          y += 1
+        }
+        Some(ImageRecord(origin, h, w, 3, 16, out))
+      }
+    } catch { case NonFatal(_) => None }
 
   def resizeArea(rec: ImageRecord, tw: Int, th: Int): ImageRecord = {
     val (h, w, c) = (rec.height, rec.width, rec.nChannels)

@@ -78,6 +78,9 @@ class PlanAuditSpec extends SparkSpec {
     // stripped), per file, from the library source itself.
     val expected = Map(
       "operators/PrefixAgg.scala" -> 1, // block-count offsets table
+      "pipeline/ImageSource.scala" -> 1, // not a join hint: the image
+        // scan's Hadoop conf as a SparkContext broadcast variable, one
+        // per scan, as Spark's own file readers ship it
       "queries/Analytics.scala" -> 9, // 1-row stats/probes/grids
       "queries/Dedup.scala" -> 10, // probe rows, <=k candidate sets
       "queries/Relational.scala" -> 7, // dims, cutpoints, 1-row stats

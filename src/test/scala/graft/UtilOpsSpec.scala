@@ -31,6 +31,67 @@ class UtilOpsSpec extends SparkSpec {
     assert(recs.forall(_.data.forall(b => (b & 0xff) == 100)))
   }
 
+  test("image source: rows equal Spark's image source on every layout, " +
+      "name and root form (A1 differential)") {
+    import java.awt.color.ColorSpace
+    import java.awt.image.BufferedImage._
+    import java.nio.charset.Charset
+    import java.nio.file.Files
+    val root = Files.createTempDirectory("imgdiff")
+    def put(rel: String, bytes: Array[Byte]): Unit = {
+      val p = root.resolve(rel)
+      Files.createDirectories(p.getParent)
+      Files.write(p, bytes)
+    }
+    val layouts = graft.ImageLayouts.encoded(20261018L)
+    // the layouts reach every decode path: both raster copies, the gray
+    // samples (8-bit, 16-bit, with alpha) and the row-wise getRGB
+    // fallback with and without alpha
+    val kinds = layouts.map { case (_, b) =>
+      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(b))
+      (img.getType, img.getColorModel.getColorSpace.getType, img.getColorModel.hasAlpha)
+    }.toSet
+    val (rgb, gray) = (ColorSpace.TYPE_RGB, ColorSpace.TYPE_GRAY)
+    for (k <- Seq((TYPE_3BYTE_BGR, rgb, false), (TYPE_4BYTE_ABGR, rgb, true),
+        (TYPE_BYTE_GRAY, gray, false), (TYPE_USHORT_GRAY, gray, false),
+        (TYPE_CUSTOM, gray, true), (TYPE_CUSTOM, rgb, false),
+        (TYPE_BYTE_INDEXED, rgb, false), (TYPE_BYTE_INDEXED, rgb, true)))
+      assert(kinds(k), s"no fixture decodes to (type, color space, alpha) $k")
+    // every layout under a plain directory, nested, and under names that
+    // need percent-encoding in a URI; a non-ASCII name only when the JVM
+    // can encode file names in it (sun.jnu.encoding; POSIX locale cannot)
+    val jnu = Charset.forName(System.getProperty("sun.jnu.encoding", "UTF-8"))
+    val nonAscii = "n\u00fcn/\u00e7od\u00e9 \u65e5"
+    val dirs = Seq("plain", "n1/n2/n3", "with space", "pct%20dir",
+      "hash#dir") ++ Seq(nonAscii).filter(jnu.newEncoder().canEncode(_))
+    for (d <- dirs; (name, bytes) <- layouts) put(s"$d/$name", bytes)
+    put("with space/a b%20c#d.png", layouts.head._2)
+    // undecodable: garbage bytes, a truncated PNG, an empty file, text
+    put("plain/corrupt.png", Array.tabulate(64)(i => (i * 37 + 11).toByte))
+    put("plain/truncated.png", layouts.head._2.take(40))
+    put("n1/empty.png", Array.emptyByteArray)
+    put("notes.txt", "not an image".getBytes("UTF-8"))
+    val decodable = dirs.size * layouts.size + 1
+
+    def fields(df: org.apache.spark.sql.DataFrame) =
+      df.select("image.*").collect().map(r => (r.getString(0), r.getInt(1),
+        r.getInt(2), r.getInt(3), r.getInt(4), r.getAs[Array[Byte]](5).toSeq))
+        .sortBy(_._1).toSeq
+    for (at <- Seq(root.toString, "file:" + root, root.toUri.toString)) {
+      val ours = ImagePipeline.readImageDir(spark, at)
+      val spark0 = spark.read.format("image").option("dropInvalid", "true")
+        .option("recursiveFileLookup", "true").load(at)
+      assert(ours.schema == spark0.schema)
+      assert(ImagePipeline.readImageDir(spark, at).queryExecution.analyzed
+        .sameResult(ours.queryExecution.analyzed), "equal reads, equal plans")
+      assert(ours.count() == decodable && spark0.count() == decodable, at)
+      val (got, want) = (fields(ours), fields(spark0))
+      assert(got.size == want.size, at)
+      got.zip(want).foreach { case (g, w) =>
+        assert(g == w, s"$at: ${g._1} differs from Spark's ${w._1}") }
+    }
+  }
+
   test("minhash sketch: deterministic, mergeable, jaccard estimate") {
     val agg = new MinHashAggregator(32)
     val t1 = Seq("a", "b", "c", "d")
