@@ -78,7 +78,7 @@ object Bench {
         }
       }
       if (secs.size == reps) timings += name -> secs.sorted.apply(reps / 2)
-      // untimed inter-query hygiene: eager localCheckpoint blocks from
+      // untimed inter-query hygiene: eager local-checkpoint blocks from
       // abandoned reps (q103/q104/CC rounds) only free after a JVM GC
       // lets ContextCleaner reap their weak refs — without this nudge
       // they accumulate across the 120-query run and inflate the LATER

@@ -12,7 +12,9 @@ import org.apache.spark.sql.SparkSession
   *    local[N] should pass N, a real cluster ~2-3x its total cores —
   *    AQE coalesces down from there at runtime);
   *  - AQE left ON (Spark default) — stage reuse, skew splits and
-  *    partition coalescing are part of the verified plan shapes.
+  *    partition coalescing are part of the verified plan shapes;
+  *  - `file://` served by [[graft.util.GraftLocalFileSystem]] (same
+  *    modes as Hadoop's, no `chmod` process per written file).
   *
   * `Tables.load` handles the nanos-timestamp parquet quirk per read and
   * resolves each table's schema once per session (it caches the
@@ -40,6 +42,12 @@ object GraftSession {
       // never fill it. Measured: -10% on the 11-key regression subset,
       // q143's serial merge-round chain -39% (OPTIMIZATION_r16.md §2).
       .config("spark.sql.codegen.cache.maxEntries", "10000")
+      // Without the Hadoop native library every local create/mkdirs
+      // forks `chmod` (each parquet part, checkpoint, .crc file and new
+      // directory); graft's local FS sets the same mode bits through
+      // java.nio.
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.util.GraftLocalFileSystem].getName)
 
   /** Local session for tests/tools: local[cores] with matching shuffle
     * parallelism. */

@@ -52,7 +52,7 @@ object HashBands {
     // — without a lineage barrier each consumer re-runs the upstream
     // scan->decode->hash pass, tripling the corpus read at 100 TB.
     // Materialize.truncate pins the 16-byte/row (id, hash) state once
-    // (the docsetsOf/q124 discipline; localCheckpoint on the bench,
+    // (the docsetsOf/q124 discipline; local checkpoint on the bench,
     // durable checkpoint under spark.graft.reliableCheckpoints)
     val mat = graft.operators.Materialize.truncate(
       hashes.select(col(idCol).as("id"), col(hashCol).as("h")))

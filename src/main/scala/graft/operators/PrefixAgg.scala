@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   *   1. block id = floor(orderKey / blockSize) — a pure function of the
   *      row, so the decomposition is reproducible across runs, partition
   *      counts, and engines (the earlier range-partition formulation
-  *      needed an eager localCheckpoint barrier because
+  *      needed an eager local-checkpoint barrier because
   *      `spark_partition_id()` fed two consumers that could re-sample
   *      different range boundaries; value-derived blocks remove both the
   *      barrier job and the range-sampling job — the whole operator is

@@ -105,16 +105,17 @@ object ImagePipeline {
     val sorted = df.orderBy(xxhash64(lit(seed), col(keyCol)), col(keyCol))
     val posSchema = sorted.schema
       .add("__pos", org.apache.spark.sql.types.LongType, nullable = false)
-    // localCheckpoint: the train and val filters are two separate jobs
-    // over this frame — without the barrier each would re-run the sort
-    // + zipWithIndex, and rows TIED on the sort key (duplicate keyCol
-    // values) could receive different positions per job, landing in
-    // both splits or neither. One materialization makes the positions
+    // Materialize.truncate: the train and val filters are two separate
+    // jobs over this frame — without the barrier each would re-run the
+    // sort + zipWithIndex, and rows TIED on the sort key (duplicate
+    // keyCol values) could receive different positions per job, landing
+    // in both splits or neither. One materialization makes the positions
     // a single consistent assignment.
-    val pos = df.sparkSession.createDataFrame(
-      sorted.rdd.zipWithIndex().map { case (r, i) =>
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i)
-      }, posSchema).localCheckpoint()
+    val pos = graft.operators.Materialize.truncate(
+      df.sparkSession.createDataFrame(
+        sorted.rdd.zipWithIndex().map { case (r, i) =>
+          org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i)
+        }, posSchema))
     (pos.filter(col("__pos") < cut).drop("__pos"),
       pos.filter(col("__pos") >= cut).drop("__pos"))
   }

@@ -546,8 +546,8 @@ object Dedup {
   /** One row per document: its hashed 3-shingle set as both a
     * rarest-first array `os` (prefix-filter order: global df asc, shk
     * tiebreak) and a value-sorted array `osh` (merge-walk verification
-    * input) — MATERIALIZED (Materialize.truncate: localCheckpoint by
-    * default, durable checkpoint() under
+    * input) — MATERIALIZED (Materialize.truncate: local checkpoint by
+    * default, durable checkpoint under
     * spark.graft.reliableCheckpoints). Shared by the q103 exact-Jaccard
     * join and the q124 containment join, whose candidate + verification
     * branches would each re-run the scan -> shingle -> df-join pipeline
@@ -1078,9 +1078,7 @@ object Dedup {
       val edges = bandPairsOf(signaturesOf(docs(s, d)))
         .select("a_id", "b_id")
       val sym = graft.operators.Materialize.truncate(
-        edges.select(col("a_id").as("src"), col("b_id").as("dst"))
-          .union(edges.select(col("b_id").as("src"),
-            col("a_id").as("dst"))))
+        graft.operators.ConnectedComponents.symmetric(edges, "a_id", "b_id"))
       val deg = graft.operators.Materialize.truncate(
         sym.groupBy("src").agg(count(lit(1)).as("deg")))
       val nDf = deg.agg(count(lit(1)).as("n"))
@@ -1150,9 +1148,7 @@ object Dedup {
       val edges = bandPairsOf(signaturesOf(docs(s, d)))
         .select("a_id", "b_id")
       val sym = graft.operators.Materialize.truncate(
-        edges.select(col("a_id").as("src"), col("b_id").as("dst"))
-          .union(edges.select(col("b_id").as("src"),
-            col("a_id").as("dst"))))
+        graft.operators.ConnectedComponents.symmetric(edges, "a_id", "b_id"))
       var live = sym
       for (_ <- 1 to 3) {
         val keep = live.groupBy("src").agg(count(lit(1)).as("deg"))

@@ -255,7 +255,7 @@ object Similarity {
       iters: Int): DataFrame = {
     // Parallelism.widen BEFORE the checkpoint (r15): the micro-unit
     // stream inherits the scan's partition count, and a single-row-
-    // group fixture file plans as ONE partition — localCheckpoint
+    // group fixture file plans as ONE partition — a local checkpoint
     // PRESERVES that layout, so every downstream Lloyd round (the
     // heaviest stages of the whole query) ran serially on one core
     // however many the session had. Hash(vec_id) is the one

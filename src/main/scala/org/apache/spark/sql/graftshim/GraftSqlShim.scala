@@ -1,15 +1,18 @@
 package org.apache.spark.sql.graftshim
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
-import org.apache.spark.sql.execution.SparkStrategy
+import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution, SQLExecution, SparkStrategy}
 
-/** The two `private[sql]` touch points a third-party physical operator
-  * needs, isolated in one tiny shim (the standard extension-library
-  * pattern): turning a hand-built [[LogicalPlan]] into a DataFrame, and
-  * appending a planner strategy to a live session. Everything else in
-  * graft.plans uses only public/`@DeveloperApi` Catalyst surfaces.
+/** The `private[sql]` touch points the library needs, isolated in one
+  * tiny shim (the standard extension-library pattern): turning a
+  * hand-built [[LogicalPlan]] into a DataFrame, appending a planner
+  * strategy to a live session, and running a plan to its row RDD the
+  * way `Dataset.checkpoint` does. Everything else in graft uses only
+  * public/`@DeveloperApi` Catalyst surfaces.
   */
 object GraftSqlShim {
 
@@ -24,5 +27,28 @@ object GraftSqlShim {
     val exp = spark.asInstanceOf[classic.SparkSession].experimental
     if (!exp.extraStrategies.contains(strategy))
       exp.extraStrategies = exp.extraStrategies :+ strategy
+  }
+
+  /** Executes `df`'s plan once as the SQL execution `action` (the
+    * `withAction` frame `Dataset.checkpoint` runs in), hands its row RDD
+    * (rows copied, as `checkpoint` copies them) to `use`, and returns a
+    * DataFrame that scans that RDD — `LogicalRDD.fromDataset`, so the
+    * plan keeps the source's statistics, partitioning and ordering —
+    * together with `use`'s result. Under AQE the query stages below
+    * the final one run here; the final stage runs when `use` (or a later
+    * action) computes the RDD. */
+  def executeToRdd[T](df: DataFrame, action: String)(
+      use: RDD[InternalRow] => T): (DataFrame, T) = {
+    val ds = df.asInstanceOf[classic.Dataset[_]]
+    val qe = ds.queryExecution
+    val (rdd, out) = SQLExecution.withNewExecutionId(qe, Some(action)) {
+      QueryExecution.withInternalError(s"""The "$action" action failed.""") {
+        qe.executedPlan.resetMetrics()
+        val rdd = qe.executedPlan.execute().map(_.copy())
+        (rdd, use(rdd))
+      }
+    }
+    (ofRows(ds.sparkSession, LogicalRDD.fromDataset(rdd, ds, ds.isStreaming)),
+      out)
   }
 }

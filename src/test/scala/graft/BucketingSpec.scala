@@ -133,7 +133,7 @@ class BucketingSpec extends SparkSpec {
   }
 
   test("partitioned sink: reads prune partitions at planning time") {
-    val dir = java.nio.file.Files.createTempDirectory("psink").toString
+    val dir = tempDir("psink").toString
     val docs = Tables.load(spark, sf, "documents")
     graft.operators.Sinks.writePartitioned(docs, dir, "lang")
     val back = graft.operators.Sinks.readPartitioned(spark, dir)
@@ -148,7 +148,7 @@ class BucketingSpec extends SparkSpec {
   }
 
   test("csv and json round-trips preserve rows and schema") {
-    val dir = java.nio.file.Files.createTempDirectory("rt").toString
+    val dir = tempDir("rt").toString
     val docs = Tables.load(spark, sf, "documents")
       .select("doc_id", "lang", "n_chars")
     graft.operators.Sinks.writeCsv(docs, s"$dir/csv")

@@ -78,35 +78,28 @@ class ContractSpec extends SparkSpec {
   private def totalitySweep(label: String)(
       transform: org.apache.spark.sql.DataFrame
         => org.apache.spark.sql.DataFrame): Unit = {
-    val dir = java.nio.file.Files.createTempDirectory(s"graft-$label").toFile
-    try {
-      Tables.names.foreach { t =>
-        transform(spark.read.parquet(s"$sf/$t.parquet"))
-          .write.mode("overwrite")
-          .parquet(s"${dir.getAbsolutePath}/$t.parquet")
-      }
-      val failures = SparkEntry.queries.toList.sortBy(_._1)
-        .flatMap { case (k, q) =>
-          // collect(), NOT count(): count() column-prunes the final
-          // projection, so a per-row expression that throws on the
-          // degraded domain (an ANSI 0 div 0, a cast, a parse) would
-          // never execute and the sweep would vacuously pass — exactly
-          // the blind spot that hid q60's empty-input divide-by-zero
-          try { q(spark, dir.getAbsolutePath).collect(); None }
-          catch { case e: Exception =>
-            Some(s"$k: ${e.getClass.getSimpleName} " +
-              String.valueOf(e.getMessage).linesIterator.take(1).mkString)
-          }
-        }
-      assert(failures.isEmpty,
-        s"${failures.size} queries throw on $label tables:\n" +
-          failures.mkString("\n"))
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete()
-      }
-      rm(dir)
+    val dir = tempDir(s"graft-$label").toFile
+    Tables.names.foreach { t =>
+      transform(spark.read.parquet(s"$sf/$t.parquet"))
+        .write.mode("overwrite")
+        .parquet(s"${dir.getAbsolutePath}/$t.parquet")
     }
+    val failures = SparkEntry.queries.toList.sortBy(_._1)
+      .flatMap { case (k, q) =>
+        // collect(), NOT count(): count() column-prunes the final
+        // projection, so a per-row expression that throws on the
+        // degraded domain (an ANSI 0 div 0, a cast, a parse) would
+        // never execute and the sweep would vacuously pass — exactly
+        // the blind spot that hid q60's empty-input divide-by-zero
+        try { q(spark, dir.getAbsolutePath).collect(); None }
+        catch { case e: Exception =>
+          Some(s"$k: ${e.getClass.getSimpleName} " +
+            String.valueOf(e.getMessage).linesIterator.take(1).mkString)
+        }
+      }
+    assert(failures.isEmpty,
+      s"${failures.size} queries throw on $label tables:\n" +
+        failures.mkString("\n"))
   }
 
   test("every query tolerates EMPTY input tables (no runtime throw)") {

@@ -156,7 +156,7 @@ class DedupSpec extends SparkSpec {
       graft.operators.ConnectedComponents
         .run(edges, "a_id", "b_id", reliable = true)
     }
-    val dir = java.nio.file.Files.createTempDirectory("cc-ckpt").toString
+    val dir = tempDir("cc-ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
     try {
       val before = spark.sparkContext.getPersistentRDDs.size
@@ -191,7 +191,7 @@ class DedupSpec extends SparkSpec {
       intercept[IllegalStateException] {
         SparkEntry.queries("q103_prefix_jaccard")(spark, sf)
       }
-      val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
+      val dir = tempDir("graft-ckpt")
       spark.sparkContext.setCheckpointDir(dir.toString)
       val rel = SparkEntry.queries("q103_prefix_jaccard")(spark, sf)
         .collect().map(_.toSeq).toSet
@@ -214,10 +214,10 @@ class DedupSpec extends SparkSpec {
     // needs no persist-first: a counting nondeterministic UDF sees each
     // of the 1000 rows once, and later actions read the checkpoint files.
     // A LAZY checkpoint is different: its first action computes the rows
-    // and the write job computes them again — the case
-    // ConnectedComponents persists for.
+    // and the write job computes them again — the case the reliable
+    // Materialize.truncateWith persists for.
     val key = graft.operators.Materialize.ReliableKey
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-once")
+    val dir = tempDir("graft-ckpt-once")
     spark.sparkContext.setCheckpointDir(dir.toString)
     spark.conf.set(key, "true")
     try {
@@ -244,6 +244,154 @@ class DedupSpec extends SparkSpec {
       spark.conf.unset(key)
       spark.sparkContext.setCheckpointDir(null)
     }
+  }
+
+  /** A 1000-row, 3-partition frame whose rows are counted, by an
+    * accumulator, each time its subtree computes them. No shuffle: the
+    * counting runs in the stage that materializes the frame. */
+  private def counted(name: String) = {
+    val acc = spark.sparkContext.longAccumulator(name)
+    val tick = udf { (x: Long) => acc.add(1); x }.asNondeterministic()
+    (acc, spark.range(0, 1000, 1, 3).select(tick(col("id")).as("id")))
+  }
+
+  /** Runs `f` in reliable-checkpoint mode, with a temp checkpoint dir. */
+  private def reliably[T](f: => T): T = {
+    val key = graft.operators.Materialize.ReliableKey
+    spark.sparkContext.setCheckpointDir(tempDir("graft-ckpt-rel").toString)
+    spark.conf.set(key, "true")
+    try f
+    finally {
+      spark.conf.unset(key)
+      spark.sparkContext.setCheckpointDir(null)
+    }
+  }
+
+  test("Materialize.truncateWith computes its subtree once and probes " +
+      "every partition, in local and reliable mode") {
+    import graft.operators.Materialize
+    def check(mode: String): Unit = {
+      val (acc, df) = counted(s"truncateWith-$mode")
+      val (out, parts) = Materialize.truncateWith(df,
+          Materialize.reliable(spark)) {
+        rows => rows.map(_.getLong(0)).sum
+      }
+      assert(acc.value == 1000L, s"$mode: the probe job recomputed rows")
+      assert(parts.size == 3 && parts.sum == 999L * 1000L / 2, mode)
+      assert(out.count() == 1000L)
+      assert(out.agg(sum("id")).head().getLong(0) == 999L * 1000L / 2)
+      assert(acc.value == 1000L,
+        s"$mode: actions on the truncated frame recomputed the subtree")
+    }
+    check("local")
+    reliably {
+      val before = spark.sparkContext.getPersistentRDDs.size
+      check("reliable")
+      assert(spark.sparkContext.getPersistentRDDs.size <= before,
+        "the reliable probe form kept its cache after the checkpoint")
+    }
+  }
+
+  test("symmetric edges: the union's rows from one edge reference; " +
+      "NULL endpoints dropped") {
+    val rnd = new scala.util.Random(7L)
+    val edges = Seq.fill(200)((rnd.nextInt(50).toLong, rnd.nextInt(50).toLong))
+      .toDF("a_id", "b_id")
+    val union = edges.select(col("a_id").as("src"), col("b_id").as("dst"))
+      .union(edges.select(col("b_id").as("src"), col("a_id").as("dst")))
+    val sym = graft.operators.ConnectedComponents
+      .symmetric(edges, "a_id", "b_id")
+    assert(sym.columns.toSeq == Seq("src", "dst"))
+    assert(sym.exceptAll(union).isEmpty && union.exceptAll(sym).isEmpty)
+    assert(sym.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => r
+    }.size == 1, "the edge list must be read once")
+    val withNull = Seq[(Option[Long], Option[Long])](
+      (Some(1L), None), (None, Some(2L)), (Some(3L), Some(4L)))
+      .toDF("a_id", "b_id")
+    assert(graft.operators.ConnectedComponents
+      .symmetric(withNull, "a_id", "b_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet == Set((3L, 4L), (4L, 3L)))
+  }
+
+  test("Materialize.hold computes its subtree once until released") {
+    val (acc, df) = counted("hold-evals")
+    val held = graft.operators.Materialize.hold(df)
+    assert(acc.value == 0L, "the lazy form computed rows before any action")
+    assert(held.df.count() == 1000L)
+    assert(held.df.agg(sum("id")).head().getLong(0) == 999L * 1000L / 2)
+    assert(acc.value == 1000L, "a second action recomputed the held rows")
+    val before = spark.sparkContext.getPersistentRDDs.size
+    held.release()
+    assert(spark.sparkContext.getPersistentRDDs.size == before - 1)
+    assert(held.df.count() == 1000L, "a released frame still recomputes")
+  }
+
+  test("the CC potential probe equals sum(cast(lbl as decimal(38,0)))") {
+    import org.apache.spark.sql.types._
+    import graft.operators.{ConnectedComponents => CC, Materialize}
+    val rnd = new scala.util.Random(20261018L)
+    val extremes = Seq(Long.MaxValue, Long.MaxValue - 1, Long.MinValue, -1L)
+    def frame(vals: Seq[Option[Long]], dt: DataType): DataFrame =
+      vals.toDF("lbl").select(col("lbl").cast(dt).as("lbl")).repartition(4)
+    val cases = Seq(
+      "seeded longs" -> (Seq.fill(500)(
+        if (rnd.nextInt(10) == 0) None else Some(rnd.nextLong())), LongType),
+      "extremes (a Long sum wraps)" ->
+        ((extremes ++ extremes ++ Seq(Long.MaxValue)).map(Some(_)), LongType),
+      "seeded ints with nulls" -> (Seq.fill(300)(
+        if (rnd.nextInt(4) == 0) None
+        else Some(rnd.nextInt().toLong)), IntegerType),
+      "empty" -> (Seq.empty[Option[Long]], LongType),
+      "all NULL" -> (Seq.fill(7)(None), LongType))
+    cases.foreach { case (name, (vals, dt)) =>
+      val df = frame(vals, dt)
+      val want = Option(df.agg(sum(col("lbl").cast(DecimalType(38, 0))))
+        .head().getDecimal(0)).map(d => BigInt(d.toBigInteger))
+      val (_, parts) =
+        Materialize.truncateWith(df, durable = false)(CC.labelSum(0, dt))
+      assert(CC.potential(parts) == want, name)
+    }
+    intercept[IllegalArgumentException](CC.labelSum(0, DoubleType))
+  }
+
+  test("connected components: one job per round, probe included") {
+    // two components, 3 rounds (initial labels, one relabel round, one
+    // confirmation). A separate aggregate query per round's potential
+    // costs one more job per probe, 3 in all.
+    val edges = Seq((5L, 3L), (3L, 9L), (9L, 12L), (20L, 21L))
+      .toDF("a_id", "b_id")
+    var rounds = 0
+    val jobs = JobLog.descriptionsDuring(spark) {
+      rounds = graft.operators.ConnectedComponents
+        .runWithStats(edges, "a_id", "b_id")._2
+    }
+    assert(rounds == 2)
+    // under local[4]: the held edge list's shuffle stage, then per round
+    // its shuffle stages and one checkpointing job (12 with a separate
+    // potential query per round)
+    assert(jobs.size == 9, s"CC job count moved: ${jobs.mkString(", ")}")
+  }
+
+  test("materialization and CC rounds name their jobs and restore the " +
+      "caller's description") {
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try {
+      val edges = Seq((5L, 3L), (3L, 9L)).toDF("a_id", "b_id")
+      val jobs = JobLog.descriptionsDuring(spark) {
+        graft.operators.Materialize.truncate(spark.range(10).toDF())
+        graft.operators.ConnectedComponents.run(edges, "a_id", "b_id")
+          .collect()
+      }
+      assert(jobs.head == graft.operators.Materialize.JobName)
+      val cc = jobs.filter(_.startsWith("graft cc round "))
+      assert(cc.distinct == Seq("graft cc round 0", "graft cc round 1"),
+        jobs.mkString(", "))
+      assert(jobs.last == "caller", "the result's own job lost the " +
+        s"caller's description: ${jobs.mkString(", ")}")
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+    } finally sc.setJobDescription(null)
   }
 
   test("jaccard dfCap: a viral stop-shingle cannot explode pair count") {

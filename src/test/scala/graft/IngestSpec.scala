@@ -6,10 +6,10 @@ import java.util.zip.{ZipEntry, ZipOutputStream}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Ingest utility semantics (A3 single-root strip, A35 markers). */
-class IngestSpec extends AnyFunSuite {
+class IngestSpec extends AnyFunSuite with TempDirs {
 
   private def makeZip(entries: Map[String, String]): File = {
-    val f = File.createTempFile("ingest", ".zip")
+    val f = tempDir("ingest").resolve("archive.zip").toFile
     val z = new ZipOutputStream(new FileOutputStream(f))
     entries.foreach { case (name, content) =>
       z.putNextEntry(new ZipEntry(name))
@@ -21,7 +21,7 @@ class IngestSpec extends AnyFunSuite {
   }
 
   private def tmpDir() =
-    java.nio.file.Files.createTempDirectory("ingest-out").toFile
+    tempDir("ingest-out").toFile
 
   test("single-root archives are extracted with the root stripped") {
     val zip = makeZip(Map(

@@ -536,48 +536,41 @@ class PropertySpec extends SparkSpec {
         cents <- Gen.chooseNum(100L, 5000L)
       } yield (g, cents / 100.0))
     } yield rows
-    val dir = java.nio.file.Files.createTempDirectory("graft-pct").toFile
-    try {
-      forSamples(rowsGen, 8) { rows =>
-        val df = rows.toDF("l_returnflag", "l_extendedprice")
-        df.write.mode("overwrite")
-          .parquet(s"${dir.getAbsolutePath}/lineitem.parquet")
-        def bits(r: org.apache.spark.sql.Row): Seq[Any] =
-          r.toSeq.map {
-            case d: Double => java.lang.Double.doubleToLongBits(d)
-            case v => v
-          }
-        val got46 = SparkEntry.queries("q46_percentiles")(
-          spark, dir.getAbsolutePath).collect().toSeq.map(bits)
-        val ref46 = df.groupBy("l_returnflag")
-          .agg(round(expr(
-            "percentile_cont(0.5) WITHIN GROUP (ORDER BY l_extendedprice)"),
-            4).as("p50"),
-            round(expr(
-              "percentile_cont(0.9) WITHIN GROUP (ORDER BY l_extendedprice)"),
-              4).as("p90"))
-          .orderBy("l_returnflag").collect().toSeq.map(bits)
-        assert(got46 == ref46,
-          s"q46 domain-counts != percentile_cont:\n$got46\n$ref46")
-        val got87 = SparkEntry.queries("q87_winsorize")(
-          spark, dir.getAbsolutePath)
-          .select("l_returnflag", "p05", "p95").collect().toSeq.map(bits)
-        val ref87 = df.groupBy("l_returnflag")
-          .agg(expr(
-            "percentile_disc(0.05) WITHIN GROUP (ORDER BY l_extendedprice)")
-            .as("p05"),
-            expr(
-              "percentile_disc(0.95) WITHIN GROUP (ORDER BY l_extendedprice)")
-              .as("p95"))
-          .orderBy("l_returnflag").collect().toSeq.map(bits)
-        assert(got87 == ref87,
-          s"q87 cutpoints != percentile_disc:\n$got87\n$ref87")
-      }
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete()
-      }
-      rm(dir)
+    val dir = tempDir("graft-pct").toFile
+    forSamples(rowsGen, 8) { rows =>
+      val df = rows.toDF("l_returnflag", "l_extendedprice")
+      df.write.mode("overwrite")
+        .parquet(s"${dir.getAbsolutePath}/lineitem.parquet")
+      def bits(r: org.apache.spark.sql.Row): Seq[Any] =
+        r.toSeq.map {
+          case d: Double => java.lang.Double.doubleToLongBits(d)
+          case v => v
+        }
+      val got46 = SparkEntry.queries("q46_percentiles")(
+        spark, dir.getAbsolutePath).collect().toSeq.map(bits)
+      val ref46 = df.groupBy("l_returnflag")
+        .agg(round(expr(
+          "percentile_cont(0.5) WITHIN GROUP (ORDER BY l_extendedprice)"),
+          4).as("p50"),
+          round(expr(
+            "percentile_cont(0.9) WITHIN GROUP (ORDER BY l_extendedprice)"),
+            4).as("p90"))
+        .orderBy("l_returnflag").collect().toSeq.map(bits)
+      assert(got46 == ref46,
+        s"q46 domain-counts != percentile_cont:\n$got46\n$ref46")
+      val got87 = SparkEntry.queries("q87_winsorize")(
+        spark, dir.getAbsolutePath)
+        .select("l_returnflag", "p05", "p95").collect().toSeq.map(bits)
+      val ref87 = df.groupBy("l_returnflag")
+        .agg(expr(
+          "percentile_disc(0.05) WITHIN GROUP (ORDER BY l_extendedprice)")
+          .as("p05"),
+          expr(
+            "percentile_disc(0.95) WITHIN GROUP (ORDER BY l_extendedprice)")
+            .as("p95"))
+        .orderBy("l_returnflag").collect().toSeq.map(bits)
+      assert(got87 == ref87,
+        s"q87 cutpoints != percentile_disc:\n$got87\n$ref87")
     }
   }
 

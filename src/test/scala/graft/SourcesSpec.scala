@@ -1,9 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -17,7 +15,7 @@ class SourcesSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(name: String): String =
-    Files.createTempDirectory(s"graft-$name").toString
+    tempDir(s"graft-$name").toString
 
   private def assertSameRows(a: DataFrame, b: DataFrame): Unit = {
     assert(a.count() == b.count())
@@ -75,42 +73,9 @@ class SourcesSpec extends SparkSpec {
     assertSameRows(src.withColumnRenamed("text", "value"), back)
   }
 
-  /** Spark jobs started while `f` runs, counted with a SparkListener.
-    * The listener bus delivers events in order, so `f`'s jobs are the
-    * ones seen between a fence job run before it and one run after. */
-  private def jobsDuring(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val seen = new LinkedBlockingQueue[String]()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.put(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(""))
-    }
-    def fence(tag: String): Unit = {
-      sc.setJobDescription(tag)
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setJobDescription(null)
-    }
-    def drainTo(tag: String): Int = {
-      var n = 0
-      var d = seen.poll(60, TimeUnit.SECONDS)
-      while (d != tag) {
-        assert(d != null, s"listener never saw the $tag fence job")
-        n += 1
-        d = seen.poll(60, TimeUnit.SECONDS)
-      }
-      n
-    }
-    sc.addSparkListener(l)
-    try {
-      fence("fence-before")
-      drainTo("fence-before")
-      f
-      fence("fence-after")
-      drainTo("fence-after")
-    } finally sc.removeSparkListener(l)
-  }
+  /** Spark jobs started while `f` runs. */
+  private def jobsDuring(f: => Unit): Int =
+    JobLog.descriptionsDuring(spark)(f).size
 
   /** Copy a fixture table file into `dir` under the name `as`. */
   private def copyTable(from: String, dir: String, as: String): Unit =

@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (one per suite, lazy). */
-trait SparkSpec extends AnyFunSuite {
+/** Shared local SparkSession for all suites (one per suite, lazy), and
+  * per-test temp trees ([[TempDirs]]). */
+trait SparkSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .appName(getClass.getSimpleName)

@@ -26,7 +26,7 @@ class StreamingSpec extends SparkSpec {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = graft.Tables.tsToTimestamp(
       spark.read.parquet(s"$sf/events.parquet"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_mb").toFile
+    val dir = tempDir("graft_mb").toFile
     val now = System.currentTimeMillis()
     val n = cuts.size + 1
     val bounds = (Long.MinValue +: cuts) :+ Long.MaxValue
@@ -54,13 +54,6 @@ class StreamingSpec extends SparkSpec {
     }
     val cuts = (1 until n).map(i => lo + (hi - lo) * i / n)
     (stageEventsAt(cuts), cuts)
-  }
-
-  private def rmTree(dir: java.io.File): Unit = {
-    dir.listFiles().foreach { f =>
-      if (f.isDirectory) f.listFiles().foreach(_.delete()); f.delete()
-    }
-    dir.delete()
   }
 
   test("tumbling window: streaming update mode equals batch") {
@@ -124,7 +117,7 @@ class StreamingSpec extends SparkSpec {
     val raw = graft.Tables.tsToTimestamp(
       spark.read.parquet(s"$sf/events.parquet"))
     val cutUs = 1705363200L * 1000000L // 2024-01-16 00:00:00 UTC
-    val dir = java.nio.file.Files.createTempDirectory("graft_sd").toFile
+    val dir = tempDir("graft_sd").toFile
     def writeOne(df: org.apache.spark.sql.DataFrame, name: String,
         mtime: Long): Unit = {
       val tmp = new java.io.File(dir, s"stage_$name")
@@ -170,13 +163,7 @@ class StreamingSpec extends SparkSpec {
         "no finalized window past the batch boundary")
       assert((dmin to (dmax - 2)).forall(got.contains),
         s"every closable day must be emitted: ${got.keySet.toSeq.sorted}")
-    } finally {
-      q.stop()
-      dir.listFiles().foreach { f =>
-        if (f.isDirectory) f.listFiles().foreach(_.delete()); f.delete()
-      }
-      dir.delete()
-    }
+    } finally q.stop()
   }
 
   test("sliding window: streaming update mode equals batch") {
@@ -261,7 +248,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming parquet sink: checkpointed append lands finalized windows") {
     // the production path — writeStream to a parquet directory with a
     // checkpoint — not just the memory sink the parity tests use
-    val out = java.nio.file.Files.createTempDirectory("ssink").toString
+    val out = tempDir("ssink").toString
     val q = StreamingWindows.tumbling(spark, sf)
       .writeStream.format("parquet")
       .option("path", s"$out/data")
@@ -830,9 +817,7 @@ class StreamingSpec extends SparkSpec {
       assert(spanning > 0,
         "fixture must contain sessions straddling the staged cuts — " +
           "otherwise this test proves nothing; re-stage with other cuts")
-    } finally {
-      q.stop(); rmTree(dir)
-    }
+    } finally q.stop()
   }
 
   test("transformWithState transitions carry across MULTI-batch " +
@@ -882,7 +867,6 @@ class StreamingSpec extends SparkSpec {
             "to prove cross-batch carry")
       } finally q.stop()
     } finally {
-      rmTree(dir)
       prev match {
         case Some(v) => spark.conf.set(key, v)
         case None => spark.conf.unset(key)
@@ -977,7 +961,6 @@ class StreamingSpec extends SparkSpec {
           "7-day frame for this test to prove state carry")
       } finally q.stop()
     } finally {
-      rmTree(dir)
       prev match {
         case Some(v) => spark.conf.set(key, v)
         case None => spark.conf.unset(key)
@@ -997,10 +980,10 @@ class StreamingSpec extends SparkSpec {
     // 7-day buffers phase 1 built.
     val (dir, _) = stageEventsFiles(3)
     val third = new java.io.File(dir, "events_2.parquet")
-    val parked = new java.io.File(dir.getParentFile,
-      s"parked_${System.nanoTime()}.parquet")
+    val parked = new java.io.File(tempDir("parked").toFile,
+      "events_2.parquet")
     java.nio.file.Files.move(third.toPath, parked.toPath)
-    val out = java.nio.file.Files.createTempDirectory("frestart").toString
+    val out = tempDir("frestart").toString
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, graft.streaming.StatefulCounters.RocksDbProvider)
@@ -1033,7 +1016,6 @@ class StreamingSpec extends SparkSpec {
         s"restart broke state recovery: ${got.size} vs ${batch.size} " +
           "events matched")
     } finally {
-      rmTree(dir); parked.delete()
       prev match {
         case Some(v) => spark.conf.set(key, v)
         case None => spark.conf.unset(key)
@@ -1188,8 +1170,8 @@ class StreamingSpec extends SparkSpec {
       case (id, "changed") => (id, 1L, "update", mergedByKey(id))
       case (id, "removed") => (id, 1L, "delete", null: String)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_cdc").toFile
-    val out = java.nio.file.Files.createTempDirectory("graft_cdc_ck").toFile
+    val dir = tempDir("graft_cdc").toFile
+    val out = tempDir("graft_cdc_ck").toFile
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, graft.streaming.StatefulCounters.RocksDbProvider)
@@ -1240,7 +1222,6 @@ class StreamingSpec extends SparkSpec {
       assert(untouched.nonEmpty && untouched.forall(got.contains),
         "phase-1 keys untouched by the diff prove restart recovery")
     } finally {
-      rmTree(dir); rmTree(out)
       prev match {
         case Some(v) => spark.conf.set(key, v)
         case None => spark.conf.unset(key)
@@ -1284,8 +1265,8 @@ class StreamingSpec extends SparkSpec {
     // wave C: a transport retry — duplicates of earlier deliveries
     val waveC = removed.toSeq.map(id => (id, 1L, "insert", "doomed")) ++
       changed.take(3).toSeq.map(id => (id, 2L, "update", mergedByKey(id)))
-    val dir = java.nio.file.Files.createTempDirectory("graft_ooo").toFile
-    val out = java.nio.file.Files.createTempDirectory("graft_ooo_ck").toFile
+    val dir = tempDir("graft_ooo").toFile
+    val out = tempDir("graft_ooo_ck").toFile
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, graft.streaming.StatefulCounters.RocksDbProvider)
@@ -1330,7 +1311,6 @@ class StreamingSpec extends SparkSpec {
         "the seq-2 delete must refuse the late seq-1 resurrection " +
           "and its duplicate redelivery")
     } finally {
-      rmTree(dir); rmTree(out)
       prev match {
         case Some(v) => spark.conf.set(key, v)
         case None => spark.conf.unset(key)
@@ -1439,7 +1419,7 @@ class StreamingSpec extends SparkSpec {
     // read, so eventsStream must fall back to the fixed fixture schema
     // instead of throwing (the r8 ADVICE regression), then adapt when
     // the first real file lands.
-    val dir = java.nio.file.Files.createTempDirectory("graft_empty").toFile
+    val dir = tempDir("graft_empty").toFile
     val q = StreamingWindows.runToMemory(
       StreamingWindows.tumbling(spark, dir.getAbsolutePath),
       "t_empty", mode = "update")
@@ -1462,9 +1442,7 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       assert(spark.table("t_empty").count() > 0,
         "windows must appear once the first file lands")
-    } finally {
-      q.stop(); rmTree(dir)
-    }
+    } finally q.stop()
   }
 
   test("empty-dir start on a LEGACY nanos deployment: the pinned " +
@@ -1472,7 +1450,7 @@ class StreamingSpec extends SparkSpec {
     // no single schema covers both physical ts layouts, so a nanos
     // deployment pins its layout via the fallback parameter — this is
     // the other half of the empty-dir contract
-    val dir = java.nio.file.Files.createTempDirectory("graft_empty_n").toFile
+    val dir = tempDir("graft_empty_n").toFile
     val stream = graft.queries.EventTime.tumblingAgg(
       StreamingWindows.eventsStream(spark, dir.getAbsolutePath,
         maxFilesPerTrigger = 0,
@@ -1495,9 +1473,7 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       assert(spark.table("t_empty_n").count() > 0,
         "windows must appear once the first nanos-layout file lands")
-    } finally {
-      q.stop(); rmTree(dir)
-    }
+    } finally q.stop()
   }
 
   test("a NONEXISTENT source path fails fast instead of silently " +
@@ -1505,13 +1481,11 @@ class StreamingSpec extends SparkSpec {
     // the empty-dir fallback is only for "directory exists, no file
     // matches yet" — a typo'd path must surface at stream definition,
     // not run forever producing zero rows
-    val parent = java.nio.file.Files.createTempDirectory("graft_ghost").toFile
+    val parent = tempDir("graft_ghost").toFile
     val ghost = new java.io.File(parent, "no_such_subdir")
-    try {
-      intercept[org.apache.spark.sql.AnalysisException] {
-        StreamingWindows.eventsStream(spark, ghost.getAbsolutePath)
-      }
-    } finally rmTree(parent)
+    intercept[org.apache.spark.sql.AnalysisException] {
+      StreamingWindows.eventsStream(spark, ghost.getAbsolutePath)
+    }
   }
 
   test("CDC apply: a malformed op fails the feed loudly instead of " +

@@ -12,7 +12,7 @@ class UtilOpsSpec extends SparkSpec {
   import spark.implicits._
 
   test("image source: reads a dir of PNGs, drops invalid (A1 parity)") {
-    val dir = java.nio.file.Files.createTempDirectory("imgsrc")
+    val dir = tempDir("imgsrc")
     def png(name: String, w: Int, h: Int): Unit = {
       val rec = ImageRecord(name, h, w, 3,
         16, Array.fill(h * w * 3)(100.toByte))
@@ -37,7 +37,7 @@ class UtilOpsSpec extends SparkSpec {
     import java.awt.image.BufferedImage._
     import java.nio.charset.Charset
     import java.nio.file.Files
-    val root = Files.createTempDirectory("imgdiff")
+    val root = tempDir("imgdiff")
     def put(rel: String, bytes: Array[Byte]): Unit = {
       val p = root.resolve(rel)
       Files.createDirectories(p.getParent)
