@@ -7,9 +7,10 @@ import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 
 /** Dev tool: print the formatted physical plan of one or more queries.
   * Usage: runMain graft.Explain <queryName>... [-sf <dir>] [-digest]
-  * With -digest, prints each query's operator-multiset digest instead
-  * (the format PlanAuditSpec pins — regenerate entries for
-  * PlanDigests.scala with this).
+  * With -digest, prints each query's operator-multiset digest instead,
+  * in PlanAuditSpec's setting — the test suites' session (local[4], 4
+  * shuffle partitions) at sf0.001 unless `-sf` says otherwise — so its
+  * rows paste into PlanDigests.scala as they are.
   */
 object Explain {
 
@@ -47,10 +48,11 @@ object Explain {
 
   def main(args: Array[String]): Unit = {
     val sfIdx = args.indexOf("-sf")
-    val sfDir = if (sfIdx >= 0) args(sfIdx + 1) else "/root/testdata/sf0.01"
     val digest = args.contains("-digest")
+    val (cores, scale) = if (digest) (4, "sf0.001") else (8, "sf0.01")
+    val sfDir = if (sfIdx >= 0) args(sfIdx + 1) else s"/root/testdata/$scale"
     val names = args.filterNot(Seq("-sf", sfDir, "-digest").contains)
-    val spark = GraftSession.builder("local[8]", 8)
+    val spark = GraftSession.builder(s"local[$cores]", cores)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -5,14 +5,14 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import graft.functions.GraftFunctions
 
-/** Session-extensions installer: makes graft's native expressions
-  * first-class SQL functions, and graft's custom physical operators
-  * plannable, on any session built with
+/** Session-extensions installer, and the only way graft installs into
+  * a session: makes graft's native expressions first-class SQL
+  * functions, graft's custom physical operators plannable and its
+  * optimizer rules active, on any session built with
   * `spark.sql.extensions=graft.GraftExtensions` (or
-  * `.withExtensions(new GraftExtensions)`), the idiomatic way to ship a
-  * Catalyst extension library. Equivalent per-session registration is
-  * graft.functions.GraftFunctions.register(spark); the two surfaces
-  * expose the SAME function set (ExtensionsSpec pins that).
+  * `.withExtensions(new GraftExtensions)`, as [[GraftSession.builder]]
+  * does). A session built without it resolves none of graft's SQL
+  * functions and plans no `AsOfJoinPlan.asof`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

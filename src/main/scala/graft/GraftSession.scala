@@ -4,9 +4,12 @@ import org.apache.spark.sql.SparkSession
 
 /** One-call session factory encoding the configuration the library is
   * verified under, so a user gets the same semantics the oracle gate
-  * runs with:
+  * runs with. Verify, Bench, Explain, DiagStages and the test suites'
+  * shared session all build through [[builder]]:
   *
-  *  - graft's native functions installed (GraftExtensions);
+  *  - GraftExtensions installed: graft's native SQL functions, the
+  *    as-of join planner strategy, and the TopOnePerKey and RangeJoin
+  *    optimizer rules;
   *  - UTC session timezone — every date_format/window oracle assumes it;
   *  - shuffle partitions sized to the cluster (caller-provided;
   *    local[N] should pass N, a real cluster ~2-3x its total cores —
@@ -48,9 +51,4 @@ object GraftSession {
       // java.nio.
       .config("spark.hadoop.fs.file.impl",
         classOf[graft.util.GraftLocalFileSystem].getName)
-
-  /** Local session for tests/tools: local[cores] with matching shuffle
-    * parallelism. */
-  def local(cores: Int): SparkSession =
-    builder(s"local[$cores]", cores).getOrCreate()
 }

@@ -131,11 +131,9 @@ object CosineSimilarity {
 }
 
 object GraftFunctions {
-  /** The single source of truth for graft's native SQL functions:
-    * name -> (expression class, builder). Both registration surfaces —
-    * per-session [[register]] and the `spark.sql.extensions` installer
-    * (graft.GraftExtensions) — iterate this table, so they can never
-    * drift apart. */
+  /** graft's native SQL functions: name -> (expression class, builder).
+    * graft.GraftExtensions injects every entry into each session it
+    * installs into, so `expr("cosine_sim(a, b)")` etc. resolve there. */
   val all: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
     ("cosine_sim", classOf[CosineSimilarity],
       (exprs: Seq[Expression]) => CosineSimilarity(exprs.head, exprs(1))),
@@ -168,29 +166,6 @@ object GraftFunctions {
     ("dot128", classOf[Dot128],
       (exprs: Seq[Expression]) => Dot128(exprs.head, exprs(1))))
 
-  /** Idempotently register graft's native expressions on a session, so
-    * `expr("cosine_sim(a, b)")` etc. resolve (SQL + DataFrame surfaces).
-    * A name whose registry binding is not graft's own builder — absent,
-    * or bound by someone else before OR AFTER a previous register call
-    * (user code, another library) — is (re-)registered with REPLACE
-    * semantics: every query self-registers assuming graft semantics, so
-    * a foreign implementation silently winning would corrupt results.
-    * When graft's builder is already bound (the steady state: the
-    * builders in `all` are stable singletons, so identity survives
-    * round trips through the registry), the call is a silent no-op —
-    * repeat registration from every query / Verify / Bench rep doesn't
-    * spam the driver log with "replaced a previously registered
-    * function". */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    all.foreach { case (name, _, builder) =>
-      val bound = reg.lookupFunctionBuilder(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(name))
-      if (!bound.exists(_ eq builder))
-        reg.createOrReplaceTempFunction(name, builder, "built-in")
-    }
-  }
-
   /** Per-(session, name) record of the registry builder a
     * [[registerUdaf]] call installed, so repeat calls can recognize
     * their own binding by identity. Weak keys: a retired session must
@@ -206,8 +181,9 @@ object GraftFunctions {
     * right after registration is remembered per session, and later
     * calls are silent no-ops only while that exact binding is still
     * live. A foreign binding of the name — made before or after a
-    * previous call — fails the identity check and is reclaimed, same
-    * semantics as [[register]].
+    * previous call — fails the identity check and is reclaimed. A typed
+    * Aggregator has no `injectFunction` form, so this is the one
+    * function a query registers itself.
     */
   def registerUdaf(spark: SparkSession, name: String,
       udf: => org.apache.spark.sql.expressions.UserDefinedFunction): Unit =

@@ -26,15 +26,14 @@ import org.apache.spark.sql.types._
   *
   * All materialization goes through [[Materialize]]: each round is
   * truncated so the plan does not grow, and the symmetric edge list
-  * every round joins is held for the loop's lifetime. With
-  * `reliable = false` the rounds use local checkpoints (executor-block
-  * storage, fastest); with `reliable = true` they are written to the
+  * every round joins is held for the loop's lifetime. By default the
+  * rounds use local checkpoints (executor-block storage, fastest); under
+  * `spark.graft.reliableCheckpoints=true` they are written to the
   * checkpoint dir, which survives executor loss: on a 1000-executor
   * cluster a multi-hour BSP loop over local blocks dies with the first
-  * lost executor, so production runs at scale should pass
-  * `reliable = true` (and set `SparkContext.setCheckpointDir` to a
-  * durable FS). This is the standard BSP/Pregel shape expressed in
-  * DataFrame operators.
+  * lost executor, so production runs at scale should set it (and
+  * `SparkContext.setCheckpointDir` to a durable FS). This is the
+  * standard BSP/Pregel shape expressed in DataFrame operators.
   */
 object ConnectedComponents {
 
@@ -109,22 +108,20 @@ object ConnectedComponents {
     * + 3, so the default maxIter = 20 covers graphs up to diameter
     * ~2^16. An empty edge set short-circuits to an empty result.
     *
-    * `reliable = true` requires `spark.sparkContext.setCheckpointDir` to
-    * be set (IllegalStateException otherwise, before any work runs).
+    * Reliable checkpoints (`spark.graft.reliableCheckpoints=true`)
+    * require `spark.sparkContext.setCheckpointDir` to be set
+    * (IllegalStateException otherwise, before any work runs).
     */
   def run(edges: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 20, reliable: Boolean = false): DataFrame =
-    runWithStats(edges, aCol, bCol, maxIter, reliable)._1
+      maxIter: Int = 20): DataFrame =
+    runWithStats(edges, aCol, bCol, maxIter)._1
 
   /** As [[run]], and also returns the number of BSP rounds executed
     * (including the final unchanged-potential confirmation round) —
     * observable so tests can pin the O(log diameter) bound. */
   def runWithStats(edges: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 20, reliable: Boolean = false): (DataFrame, Int) = {
-    if (reliable &&
-        edges.sparkSession.sparkContext.getCheckpointDir.isEmpty)
-      throw new IllegalStateException(
-        "reliable = true needs SparkContext.setCheckpointDir(<durable fs>)")
+      maxIter: Int = 20): (DataFrame, Int) = {
+    Materialize.requireCheckpointDir(edges.sparkSession)
 
     // One truncation per round, whose job also returns the round's
     // potential: a round costs its shuffle stages plus ONE job.
@@ -132,7 +129,7 @@ object ConnectedComponents {
       val lbl = df.schema.fieldIndex("lbl")
       val probe = labelSum(lbl, df.schema(lbl).dataType)
       val (out, parts) =
-        Materialize.truncateWith(df, reliable, s"graft cc round $i")(probe)
+        Materialize.truncateWith(df, s"graft cc round $i")(probe)
       (out, potential(parts))
     }
 

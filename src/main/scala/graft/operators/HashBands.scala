@@ -44,7 +44,6 @@ object HashBands {
     * 64-bit long hash column. */
   def cappedBandPairs(hashes: DataFrame, idCol: String, hashCol: String,
       cap: Int = BandBucketCap, maxHamming: Int = 3): DataFrame = {
-    graft.functions.GraftFunctions.register(hashes.sparkSession)
     val cappedIds = udaf(new graft.functions.CappedIdList(cap),
       Encoders.scalaLong)
     // the hash table feeds THREE consumers (band grouping + both

@@ -54,7 +54,7 @@ object Materialize {
   private val DescriptionKey = "spark.job.description"
 
   /** Whether this session asked for durable checkpoints. */
-  def reliable(spark: SparkSession): Boolean =
+  private def reliable(spark: SparkSession): Boolean =
     spark.conf.getOption(ReliableKey).exists(_.trim.equalsIgnoreCase("true"))
 
   /** Runs `body` with the jobs it starts described as `name`, restoring
@@ -67,9 +67,10 @@ object Materialize {
     finally sc.setLocalProperty(DescriptionKey, outer)
   }
 
-  /** Fails fast, before any work, if durable mode has nowhere to write. */
-  private def requireCheckpointDir(spark: SparkSession): Unit =
-    if (spark.sparkContext.getCheckpointDir.isEmpty)
+  /** Fails fast, before any work, if the session asked for durable
+    * checkpoints and they have nowhere to write. */
+  private[operators] def requireCheckpointDir(spark: SparkSession): Unit =
+    if (reliable(spark) && spark.sparkContext.getCheckpointDir.isEmpty)
       throw new IllegalStateException(
         s"$ReliableKey=true needs SparkContext.setCheckpointDir(<durable fs>)")
 
@@ -77,10 +78,9 @@ object Materialize {
     * session's durability knob. */
   def truncate(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    val durable = reliable(spark)
-    if (durable) requireCheckpointDir(spark)
+    requireCheckpointDir(spark)
     named(spark, JobName)(
-      if (durable) df.checkpoint() else df.localCheckpoint())
+      if (reliable(spark)) df.checkpoint() else df.localCheckpoint())
   }
 
   /** A lazily materialized frame; [[release]] frees its cached blocks. */
@@ -106,8 +106,9 @@ object Materialize {
     *
     *  1. the plan runs as one SQL execution (`Dataset.checkpoint`'s
     *     frame), giving its row RDD;
-    *  2. the RDD is marked for a local checkpoint, or, with `durable`,
-    *     persisted and then marked for a reliable one;
+    *  2. the RDD is marked for a local checkpoint, or, under the
+    *     session's durability knob ([[reliable]]), persisted and then
+    *     marked for a reliable one;
     *  3. one `runJob` fills the cache/checkpoint and returns one probe
     *     value per partition — job results, not accumulators, so a
     *     retried task cannot count twice;
@@ -115,13 +116,12 @@ object Materialize {
     *     the cache, as the checkpoint files hold the rows.
     *
     * `probe` sees the partition's cached rows and need not consume
-    * them. `durable` is the session's knob ([[reliable]]) or a caller's
-    * own, as ConnectedComponents' `reliable` parameter. */
-  def truncateWith[T: ClassTag](df: DataFrame, durable: Boolean,
-      name: String = JobName)(
+    * them. */
+  def truncateWith[T: ClassTag](df: DataFrame, name: String = JobName)(
       probe: Iterator[InternalRow] => T): (DataFrame, Seq[T]) = {
     val spark = df.sparkSession
-    if (durable) requireCheckpointDir(spark)
+    requireCheckpointDir(spark)
+    val durable = reliable(spark)
     named(spark, name) {
       GraftSqlShim.executeToRdd(df, "truncateWith") { rdd =>
         if (durable) {

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, BindReferences, Expression, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, Project}
@@ -46,12 +46,12 @@ object AsOfJoinPlan {
 
   /** As-of-join `left` to `right`. All output column names must be
     * disjoint; the right side keeps its own key/ts columns (select them
-    * away afterwards if unwanted). */
+    * away afterwards if unwanted). The session must carry
+    * GraftExtensions (see [[graft.GraftSession]]): it alone plans the
+    * node. */
   def asof(left: DataFrame, right: DataFrame,
       leftKey: String, rightKey: String,
       leftTs: String, rightTs: String): DataFrame = {
-    val spark = left.sparkSession
-    GraftSqlShim.ensureStrategy(spark, AsOfJoinStrategy)
     val lp = left.queryExecution.analyzed
     // re-alias the right side with fresh exprIds: both inputs often
     // derive from the same scan (q63: purchases and signups are both
@@ -71,7 +71,7 @@ object AsOfJoinPlan {
     val node = AsOfJoinNode(lp, rp,
       attr(lp.output, leftKey, "left"), attr(rp.output, rightKey, "right"),
       attr(lp.output, leftTs, "left"), attr(rp.output, rightTs, "right"))
-    GraftSqlShim.ofRows(spark, node)
+    GraftSqlShim.ofRows(left.sparkSession, node)
   }
 }
 
@@ -97,7 +97,7 @@ case class AsOfJoinNode(left: LogicalPlan, right: LogicalPlan,
 }
 
 /** Plans [[AsOfJoinNode]] to [[AsOfJoinExec]]; injected by
-  * GraftExtensions and (idempotently) by [[AsOfJoinPlan.asof]]. */
+  * GraftExtensions. */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsOfJoinNode(l, r, lk, rk, lt, rt) =>

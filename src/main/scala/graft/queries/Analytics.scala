@@ -665,7 +665,6 @@ object Analytics {
     // checks the SKETCH SEMANTICS, not a tolerance. Output: per-user
     // exact count, CMS estimate, and the (provably >= 0) overestimate.
     "q112_cms_counts" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val k = Tables.load(s, d, "events")
         .groupBy("user_id").agg(count(lit(1)).as("exact"))
         .withColumn("h", expr("hash60(cast(user_id as string))"))

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.{AudioFp64, GraftFunctions}
+import graft.functions.AudioFp64
 import graft.operators.HashBands
 import graft.pipeline.AudioOps
 
@@ -87,11 +87,9 @@ object AudioDedup {
   }
 
   /** (track_id, afp) — decode + one codegen'd fingerprint pass. */
-  private[graft] def fingerprintsOf(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
+  private[graft] def fingerprintsOf(s: SparkSession, d: String): DataFrame =
     decodedCorpus(s, d)
       .select(col("track_id"), expr("audiofp64(samples)").as("afp"))
-  }
 
   val queries: Map[String, Q] = Map(
     // q150: per-track 64-bit acoustic fingerprint — the audio content

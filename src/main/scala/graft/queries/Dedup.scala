@@ -151,7 +151,6 @@ object Dedup {
     * kept ONLY as the differential-test reference (DedupSpec pins the
     * two bit-identical); production paths use the map-only version. */
   def signaturesOfGrouped(docsDf: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docsDf.sparkSession)
     val hashed = shingledOf(docsDf)
       .select(col("doc_id"), expr(hash60("sh")).as("h"))
     val aggs = (0 until nHash).map(i =>
@@ -190,7 +189,6 @@ object Dedup {
     * exploded shape either, and NULL never equi-joins, so both shapes
     * treat them as near-dup-immune. */
   def withBandFingerprints(docsDf: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docsDf.sparkSession)
     // ONE fused native pass (graft.functions.MinhashBands): per 3-gram
     // one MD5 + 16 mix61 against running minima — replaces the layered
     // __hs digest array + 16 array_min(transform(...)) HOF scans (17
@@ -229,7 +227,6 @@ object Dedup {
     */
   def shingledOf(docsDf: DataFrame,
       carry: Seq[String] = Nil): DataFrame = {
-    graft.functions.GraftFunctions.register(docsDf.sparkSession)
     // `carry` (r16): extra per-document columns to keep alongside the
     // exploded shingles (q115 rides its stratum flag through the shared
     // stream); the default keeps every existing call site's projection
@@ -383,7 +380,6 @@ object Dedup {
     * digest+vote loop per document instead of per-bit lambdas, with an
     * MD5-derived token hash DuckDB reproduces exactly (full oracle). */
   def simhashOf(docsDf: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docsDf.sparkSession)
     // widen like the minhash/jaccard/docsets kernels: the per-document
     // digest+vote loop is the expensive map here, and a single-row-group
     // input would otherwise plan it as ONE task regardless of cores
@@ -794,8 +790,7 @@ object Dedup {
     // transitive closure over the same pairs.
     "q67_dedup_clusters" -> ((s, d) => {
       val edges = jaccardPairsOf(docs(s, d), 0.5).select("a_id", "b_id")
-      graft.operators.ConnectedComponents.run(edges, "a_id", "b_id",
-          reliable = graft.operators.Materialize.reliable(s))
+      graft.operators.ConnectedComponents.run(edges, "a_id", "b_id")
         .withColumnRenamed("node", "doc_id")
         .orderBy("doc_id")
     }),
@@ -811,8 +806,7 @@ object Dedup {
     "q102_cluster_canon" -> ((s, d) => {
       val edges = bandPairsOf(signaturesOf(docs(s, d)))
         .select("a_id", "b_id")
-      val cl = graft.operators.ConnectedComponents.run(edges, "a_id", "b_id",
-          reliable = graft.operators.Materialize.reliable(s))
+      val cl = graft.operators.ConnectedComponents.run(edges, "a_id", "b_id")
         .withColumnRenamed("node", "doc_id")
       Tables.load(s, d, "documents").select("doc_id", "n_chars")
         .join(cl, Seq("doc_id"), "left")
@@ -1174,7 +1168,6 @@ object Dedup {
     // order to disagree on. Doc ids and embedding vec_ids share the id
     // space (the q66 convention).
     "q122_rrf_fusion" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val sparse = bm25Scores(s, d)
         .orderBy(col("sc").desc, col("doc_id")).limit(20)
         .withColumn("r_sparse", row_number()

@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions
 import graft.operators.HashBands
 import graft.pipeline.{ImageOps, ImageRecord}
 
@@ -103,11 +102,9 @@ object ImageDedup {
   }
 
   /** (img_id, dhash) over the decoded corpus — one codegen'd map pass. */
-  private[graft] def hashesOf(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
+  private[graft] def hashesOf(s: SparkSession, d: String): DataFrame =
     decodedCorpus(s, d)
       .select(col("img_id"), expr("dhash64(data, w, h, c)").as("dhash"))
-  }
 
   // ------------------------------------------------ video (q149)
 
@@ -183,7 +180,6 @@ object ImageDedup {
     * r15 (the formula replay above). */
   private[graft] def videoNearDups(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     val media = graft.pipeline.Multimodal.asMediaFrame(
       clipCorpus(s, d), "clip_id", "video", "bytes")
     // every frame: delay 100 ms, sample every 100 ms -> all frames

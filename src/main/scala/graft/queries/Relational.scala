@@ -160,7 +160,9 @@ object Relational {
         .orderBy("a_key", "b_key")
     }),
 
-    // q12: non-equi range join (date interval, BNLJ with bounded sides)
+    // q12: non-equi range join (date interval). Written as a BNLJ with
+    // bounded sides; GraftExtensions' RangeJoinRule plans it as the
+    // bucketed equi-join of the twin below
     "q12_range_join" -> ((s, d) => {
       // widen (r15): the probe side's join + count-distinct expand ran
       // on the month-slice scan's one task; the shipdate range still
@@ -759,7 +761,6 @@ object Relational {
     // functions/BloomFilter.scala) is native and codegen'd, so the
     // prune lives inside the scan's whole-stage-codegen span.
     "q93_bloom_prune" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       // 2^20 bits = 128 KiB: ~35 bits/key at sf0.1's ~30k urgent
       // orders (FP ~1.5e-5 at K=6 — see BloomFilter.K); size the
       // filter for the BUILD side's key count, not the probe side's

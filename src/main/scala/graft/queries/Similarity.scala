@@ -30,10 +30,8 @@ object Similarity {
           + (case when element_at(embedding, 3) > 0 then 4 else 0 end)
           + (case when element_at(embedding, 4) > 0 then 8 else 0 end) as bigint)""")
 
-  private def emb(s: SparkSession, d: String) = {
-    graft.functions.GraftFunctions.register(s)
+  private def emb(s: SparkSession, d: String) =
     Tables.load(s, d, "embeddings")
-  }
 
   /** Sign-bucket LSH near-duplicate candidate edges over an
     * (vec_id, embedding) frame: pairs with a_id < b_id in the same
@@ -179,7 +177,6 @@ object Similarity {
     * shape at any scale: the corpus never shuffles to be assigned.
     * Centroids broadcast (k·dims rows, domain-bounded). */
   private def assignTo(ev: DataFrame, cent: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(ev.sparkSession)
     ev.crossJoin(broadcast(centArrOf(cent)))
       .select(col("vec_id"), col("c_id"),
         expr("dot128(varr, sarr)").as("dot"), size(col("varr")).as("nv"))
@@ -207,7 +204,6 @@ object Similarity {
     * no (probe, centroid) row for it — so the candidate set is empty,
     * and dot128's length check never sees the empty array. */
   private[graft] def probeLists(ev: DataFrame, cent: DataFrame, n: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(ev.sparkSession)
     ev.filter(col("vec_id") === 0 && size(col("varr")) > 0)
       .crossJoin(broadcast(centArrOf(cent)))
       .select(col("c_id"), expr("dot128(varr, sarr)").as("dot"))
@@ -920,8 +916,7 @@ object Similarity {
     // closure over the same edge predicate.
     "q117_semantic_dedup" -> ((s, d) => {
       val edges = embedNearDupEdges(emb(s, d), 0.3).select("a_id", "b_id")
-      graft.operators.ConnectedComponents.run(edges, "a_id", "b_id",
-          reliable = graft.operators.Materialize.reliable(s))
+      graft.operators.ConnectedComponents.run(edges, "a_id", "b_id")
         .filter(col("node") =!= col("cluster_id"))
         .select(col("node").as("vec_id"), col("cluster_id").as("kept_by"))
         .orderBy("vec_id")

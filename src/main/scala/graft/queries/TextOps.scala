@@ -635,7 +635,6 @@ object TextOps {
     // because (n3-d3)/n3 is a small-denominator rational that can land
     // exactly on a rounding tie where Spark and DuckDB disagree.
     "q70_repetition" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       docs(s, d)
         .select(col("doc_id"),
           greatest(size(col("tok")) - 2, lit(0)).cast("long").as("n3"),
@@ -738,7 +737,6 @@ object TextOps {
     // and repartitions — no RNG, no seed plumbing, and exact duplicates
     // always land on the same side. Map-only + one tiny per-lang agg.
     "q80_mixture_sample" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.load(s, d, "documents")
         .withColumn("keep", expr(
           """hash60(text) % 100 < CASE lang
@@ -1167,7 +1165,6 @@ object TextOps {
     // per-lang aggregate + a 1-row total broadcast (BNLJ allowlisted),
     // then map-side keeps.
     "q106_temperature_mix" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val cnt = Tables.load(s, d, "documents")
         .groupBy("lang").agg(count(lit(1)).as("c"))
         .withColumn("w", expr("cast(round(sqrt(c) * 1000000) as bigint)"))

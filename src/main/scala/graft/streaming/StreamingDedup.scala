@@ -142,7 +142,6 @@ object StreamingDedup {
   def prefixJaccardNew(stream: DataFrame, docsets: DataFrame,
       postings: DataFrame, t: Double = 0.5): DataFrame = {
     val dd = graft.queries.Dedup
-    graft.functions.GraftFunctions.register(stream.sparkSession)
     val withOs = dd.withTok(stream)
       .withColumn("os",
         expr("sort_array(transform(shingles3(tok), x -> xxhash64(x)))"))
@@ -192,7 +191,6 @@ object StreamingDedup {
   def containmentNew(stream: DataFrame, docsets: DataFrame,
       postings: DataFrame, t: Double = 0.75): DataFrame = {
     val dd = graft.queries.Dedup
-    graft.functions.GraftFunctions.register(stream.sparkSession)
     val withOs = dd.withTok(stream)
       .withColumn("os",
         expr("sort_array(transform(shingles3(tok), x -> xxhash64(x)))"))

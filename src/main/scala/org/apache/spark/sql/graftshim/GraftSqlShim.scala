@@ -5,29 +5,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
-import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution, SQLExecution, SparkStrategy}
+import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution, SQLExecution}
 
 /** The `private[sql]` touch points the library needs, isolated in one
   * tiny shim (the standard extension-library pattern): turning a
-  * hand-built [[LogicalPlan]] into a DataFrame, appending a planner
-  * strategy to a live session, and running a plan to its row RDD the
-  * way `Dataset.checkpoint` does. Everything else in graft uses only
-  * public/`@DeveloperApi` Catalyst surfaces.
+  * hand-built [[LogicalPlan]] into a DataFrame, and running a plan to
+  * its row RDD the way `Dataset.checkpoint` does. Everything else in
+  * graft uses only public/`@DeveloperApi` Catalyst surfaces.
   */
 object GraftSqlShim {
 
   /** `Dataset.ofRows` for a custom logical plan. */
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
-
-  /** Idempotently appends `strategy` to the session's extra planner
-    * strategies (the per-session twin of
-    * `SparkSessionExtensions.injectPlannerStrategy`). */
-  def ensureStrategy(spark: SparkSession, strategy: SparkStrategy): Unit = {
-    val exp = spark.asInstanceOf[classic.SparkSession].experimental
-    if (!exp.extraStrategies.contains(strategy))
-      exp.extraStrategies = exp.extraStrategies :+ strategy
-  }
 
   /** Executes `df`'s plan once as the SQL execution `action` (the
     * `withAction` frame `Dataset.checkpoint` runs in), hands its row RDD

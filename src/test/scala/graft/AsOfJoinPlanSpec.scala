@@ -165,13 +165,10 @@ class AsOfJoinPlanSpec extends SparkSpec {
   }
 
   test("the strategy is injected by GraftExtensions (no manual ensure)") {
-    // SparkSpec sessions are built via GraftSession -> GraftExtensions;
-    // planning an AsOfJoinNode must succeed even before AsOfJoinPlan.asof
-    // has patched experimental strategies (fresh-session path).
+    // SparkSpec sessions are built via GraftSession -> GraftExtensions,
+    // the only path that installs the strategy
     assert(spark.sessionState.planner.strategies
-      .exists(_.getClass.getName.contains("AsOfJoinStrategy")) ||
-      spark.experimental.extraStrategies
-        .exists(_.getClass.getName.contains("AsOfJoinStrategy")),
+      .contains(graft.plans.AsOfJoinStrategy),
       "AsOfJoinStrategy must be available session-wide")
   }
 }

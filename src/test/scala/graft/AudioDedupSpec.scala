@@ -35,7 +35,6 @@ class AudioDedupSpec extends SparkSpec {
         Array.fill[java.lang.Double](63)(0.5))) == null)
     // the SQL surface agrees and yields NULL (not a task kill) on the
     // invalid row
-    graft.functions.GraftFunctions.register(spark)
     val out = Seq((1 to 65).map(_ / 32768.0).toArray,
         (1 to 10).map(_ / 32768.0).toArray)
       .toDF("samples").selectExpr("audiofp64(samples) AS afp").collect()

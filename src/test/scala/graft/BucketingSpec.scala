@@ -135,8 +135,8 @@ class BucketingSpec extends SparkSpec {
   test("partitioned sink: reads prune partitions at planning time") {
     val dir = tempDir("psink").toString
     val docs = Tables.load(spark, sf, "documents")
-    graft.operators.Sinks.writePartitioned(docs, dir, "lang")
-    val back = graft.operators.Sinks.readPartitioned(spark, dir)
+    docs.write.mode("overwrite").partitionBy("lang").parquet(dir)
+    val back = spark.read.parquet(dir)
     assert(back.count() == docs.count())
     val filtered = back.filter(org.apache.spark.sql.functions.col("lang") === "en")
     filtered.count()
@@ -151,21 +151,22 @@ class BucketingSpec extends SparkSpec {
     val dir = tempDir("rt").toString
     val docs = Tables.load(spark, sf, "documents")
       .select("doc_id", "lang", "n_chars")
-    graft.operators.Sinks.writeCsv(docs, s"$dir/csv")
-    val csvBack = graft.operators.Sinks.readCsv(spark, s"$dir/csv", docs.schema)
+    docs.write.option("header", "true").csv(s"$dir/csv")
+    val csvBack = spark.read.option("header", "true").schema(docs.schema)
+      .csv(s"$dir/csv")
     assert(csvBack.schema == docs.schema)
     assert(csvBack.collect().toSet == docs.collect().toSet)
-    graft.operators.Sinks.writeJson(docs, s"$dir/json")
-    val jsonBack = graft.operators.Sinks.readJson(spark, s"$dir/json", docs.schema)
+    docs.write.json(s"$dir/json")
+    val jsonBack = spark.read.schema(docs.schema).json(s"$dir/json")
     assert(jsonBack.collect().toSet == docs.collect().toSet)
-    graft.operators.Sinks.writeOrc(docs, s"$dir/orc")
-    val orcBack = graft.operators.Sinks.readOrc(spark, s"$dir/orc")
+    docs.write.orc(s"$dir/orc")
+    val orcBack = spark.read.orc(s"$dir/orc")
     assert(orcBack.schema.fieldNames.toSeq == docs.schema.fieldNames.toSeq)
     assert(orcBack.collect().toSet == docs.collect().toSet)
     val lines = Tables.load(spark, sf, "documents")
       .select(org.apache.spark.sql.functions.col("text"))
-    graft.operators.Sinks.writeText(lines, s"$dir/text")
-    val textBack = graft.operators.Sinks.readText(spark, s"$dir/text")
+    lines.write.text(s"$dir/text")
+    val textBack = spark.read.text(s"$dir/text")
     assert(textBack.collect().map(_.getString(0)).toSet ==
       lines.collect().map(_.getString(0)).toSet)
   }

@@ -151,17 +151,15 @@ class DedupSpec extends SparkSpec {
   test("connected components: reliable=true checkpoints and still converges") {
     // without a checkpoint dir it must fail fast, before any Spark jobs
     val edges = Seq((5L, 3L), (3L, 9L)).toDF("a_id", "b_id")
-    spark.sparkContext.setCheckpointDir(null)
-    intercept[IllegalStateException] {
-      graft.operators.ConnectedComponents
-        .run(edges, "a_id", "b_id", reliable = true)
-    }
-    val dir = tempDir("cc-ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    try {
+    reliably {
+      spark.sparkContext.setCheckpointDir(null)
+      intercept[IllegalStateException] {
+        graft.operators.ConnectedComponents.run(edges, "a_id", "b_id")
+      }
+      spark.sparkContext.setCheckpointDir(tempDir("cc-ckpt").toString)
       val before = spark.sparkContext.getPersistentRDDs.size
       val cc = graft.operators.ConnectedComponents
-        .run(edges, "a_id", "b_id", reliable = true)
+        .run(edges, "a_id", "b_id")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
       assert(cc == Map(3L -> 3L, 5L -> 3L, 9L -> 3L))
       // the r13 persist-before-checkpoint fix (stops the checkpoint
@@ -171,7 +169,7 @@ class DedupSpec extends SparkSpec {
       // multi-hour 100 TB loop
       assert(spark.sparkContext.getPersistentRDDs.size <= before,
         "reliable CC leaked per-round caches")
-    } finally spark.sparkContext.setCheckpointDir(null)
+    }
   }
 
   test("q103/q104 materialization honors spark.graft.reliableCheckpoints") {
@@ -272,8 +270,7 @@ class DedupSpec extends SparkSpec {
     import graft.operators.Materialize
     def check(mode: String): Unit = {
       val (acc, df) = counted(s"truncateWith-$mode")
-      val (out, parts) = Materialize.truncateWith(df,
-          Materialize.reliable(spark)) {
+      val (out, parts) = Materialize.truncateWith(df) {
         rows => rows.map(_.getLong(0)).sum
       }
       assert(acc.value == 1000L, s"$mode: the probe job recomputed rows")
@@ -349,7 +346,7 @@ class DedupSpec extends SparkSpec {
       val want = Option(df.agg(sum(col("lbl").cast(DecimalType(38, 0))))
         .head().getDecimal(0)).map(d => BigInt(d.toBigInteger))
       val (_, parts) =
-        Materialize.truncateWith(df, durable = false)(CC.labelSum(0, dt))
+        Materialize.truncateWith(df)(CC.labelSum(0, dt))
       assert(CC.potential(parts) == want, name)
     }
     intercept[IllegalArgumentException](CC.labelSum(0, DoubleType))

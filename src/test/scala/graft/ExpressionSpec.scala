@@ -19,7 +19,6 @@ class ExpressionSpec extends SparkSpec {
            (s, v) -> s + cast(v as double) * cast(v as double))))"""
 
   test("cosine_sim: known values") {
-    GraftFunctions.register(spark)
     val df = Seq(
       (Array(1f, 0f), Array(1f, 0f)),   // identical -> 1
       (Array(1f, 0f), Array(0f, 1f)),   // orthogonal -> 0
@@ -31,7 +30,6 @@ class ExpressionSpec extends SparkSpec {
 
   test("cosine_sim: zero vectors yield 0.0, never NaN (codegen + " +
       "interpreted)") {
-    GraftFunctions.register(spark)
     // A zero-norm side is 0/0 in raw IEEE — and Spark orders NaN above
     // every real number, so a NaN would outrank every genuine neighbor
     // in a top-k and pass every sim >= t filter. The pinned contract is
@@ -55,7 +53,6 @@ class ExpressionSpec extends SparkSpec {
 
   test("cosine_sim: NaN/Inf components pin 0.0 too (the result-finiteness " +
       "guard, codegen + interpreted)") {
-    GraftFunctions.register(spark)
     // A poisoned COMPONENT (fp overflow in an encoder) propagates NaN
     // through the accumulators exactly like a zero norm propagates 0/0 —
     // same downstream poison (NaN sorts above every real), same pin.
@@ -75,7 +72,6 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("cosine_sim: bit-identical to the HOF formulation on real data") {
-    GraftFunctions.register(spark)
     val e = Tables.load(spark, sf, "embeddings")
     val probe = e.filter($"vec_id" === 0)
       .select($"embedding".as("b")).crossJoin(e.select($"vec_id", $"embedding".as("a")))
@@ -86,7 +82,6 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("cosine_sim: length mismatch fails loudly through the SQL/codegen path") {
-    GraftFunctions.register(spark)
     val df = Seq((Array(1f, 0f), Array(1f))).toDF("a", "b")
     val ex = intercept[Throwable] {
       df.select(expr("cosine_sim(a, b)")).collect()
@@ -101,7 +96,6 @@ class ExpressionSpec extends SparkSpec {
 
   test("jl_project: equals the companion reference per cell, and the " +
       "sign matrix is NOT rank-1 (the i+j-parity regression)") {
-    GraftFunctions.register(spark)
     // per-cell: out[j] = Σ_i sign(i,j)·x_i — pin the SQL path against
     // a driver-side fold over JlProject.sign (the single source)
     val x = Array(0.25f, -1.5f, 3f, 0.125f, -2f)
@@ -125,7 +119,6 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("jl_project: k is validated at ANALYSIS time, not per row") {
-    GraftFunctions.register(spark)
     // k <= 0 and absurd k must fail analysis (a 2e9 k would otherwise
     // attempt a ~16 GB per-row allocation at execution — executor OOM,
     // not a clean error), and a non-foldable k is rejected outright
@@ -148,7 +141,6 @@ class ExpressionSpec extends SparkSpec {
 
   test("cosine_sim: double and mixed float/double sides (the jl_project " +
       "output type), float path unchanged") {
-    GraftFunctions.register(spark)
     val got = spark.sql(
       """SELECT
            cosine_sim(array(1.0D, 0.0D), array(1.0D, 0.0D)) AS dd,
@@ -161,7 +153,6 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("native simhash64 equals the HOF formulation (same hash, seed 42)") {
-    GraftFunctions.register(spark)
     val hofSimhash =
       """aggregate(
            transform(
@@ -183,7 +174,6 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("mix61: exact residues mod M61 under ANSI mode (BigInt reference)") {
-    GraftFunctions.register(spark)
     assert(spark.conf.get("spark.sql.ansi.enabled") == "true",
       "this test must run under ANSI mode — the whole point of mix61")
     val M61 = graft.functions.Mix61.M61
@@ -214,7 +204,6 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("mix61: null propagation and type check") {
-    GraftFunctions.register(spark)
     val df = Seq((Some(1L), None: Option[Long])).toDF("h", "a")
     assert(df.select(expr("mix61(h, a, 3L)")).head().isNullAt(0))
     val err = intercept[Exception] {
@@ -224,7 +213,6 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("shingles3: bit-identical to the HOF formulation on real data") {
-    GraftFunctions.register(spark)
     val docs = graft.queries.Dedup.withTok(
       Tables.load(spark, sf, "documents"))
     val hof =
@@ -239,7 +227,6 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("shingles3 + simhash_md5 + hash60: unicode/multibyte parity") {
-    GraftFunctions.register(spark)
     // multibyte tokens (accents, CJK, emoji) must hash/shingle exactly
     // like the SQL formulations — both paths operate on UTF-8 bytes
     val docs = Seq(
@@ -266,7 +253,6 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("pair_combos: equals the nested-transform formulation + edge cases") {
-    GraftFunctions.register(spark)
     val df = Seq(Seq(1L, 2L, 3L), Seq(7L, 9L), Seq(4L), Seq.empty[Long])
       .toDF("ids")
     val hof =
@@ -296,7 +282,6 @@ class ExpressionSpec extends SparkSpec {
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, "CODEGEN_ONLY")
     try {
-      GraftFunctions.register(spark)
       spark.udf.register("bloom_agg_tiny",
         udaf(new graft.functions.BloomFilterAgg(1 << 10),
           org.apache.spark.sql.Encoders.scalaLong))
@@ -357,7 +342,6 @@ class ExpressionSpec extends SparkSpec {
     val key = "spark.sql.codegen.factoryMode"
     val prev = spark.conf.getOption(key)
     def probe(): org.apache.spark.sql.Row = {
-      GraftFunctions.register(spark)
       Seq((Seq(1f, 2f, 0.5f), Seq(0.5f, 1f, 2f),
           Seq("alpha", "beta", "gamma", "delta"),
           Seq(1L, 4L, 9L), Seq(4L, 9L, 12L),
@@ -403,7 +387,6 @@ class ExpressionSpec extends SparkSpec {
     // si) per (vector, centroid). Any divergence here means the Lloyd
     // assignments — and every IVF query's oracle hash — drift.
     import org.apache.spark.sql.functions._
-    GraftFunctions.register(spark)
     val e = Tables.load(spark, sf, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val el = e.select(col("vec_id"), posexplode(col("embedding")))
@@ -434,7 +417,6 @@ class ExpressionSpec extends SparkSpec {
 
   test("dot128: null/empty semantics, range check, length mismatch") {
     import org.apache.spark.sql.functions._
-    GraftFunctions.register(spark)
     def one(sql: String): org.apache.spark.sql.Row =
       spark.sql(s"SELECT $sql AS v").collect().head
     // empty arrays -> NULL (the relational group never existed)
@@ -473,8 +455,8 @@ class ExpressionSpec extends SparkSpec {
   test("GraftExtensions installs into SparkSessionExtensions") {
     val e = new org.apache.spark.sql.SparkSessionExtensions
     new GraftExtensions().apply(e)  // must register without throwing
-    // both surfaces iterate GraftFunctions.all — pin the full set here
-    // so adding an expression without registering it fails a test
+    // GraftExtensions injects GraftFunctions.all — pin the full set here
+    // so adding an expression without listing it fails a test
     assert(GraftFunctions.all.map(_._1).toSet == Set("cosine_sim",
       "simhash64", "simhash_md5", "hash60", "mix61", "shingles3",
       "minhash_bands", "pair_combos", "bloom_might_contain",
@@ -483,7 +465,6 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("sorted_intersect_count: equals size(array_intersect) on sorted sets") {
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(42)
     val rows = (0 until 200).map { _ =>
       val a = Seq.fill(rnd.nextInt(60))(rnd.nextInt(80).toLong)
@@ -531,7 +512,6 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("bloom_might_contain rejects wrong-typed arguments at analysis") {
-    GraftFunctions.register(spark)
     // an INT hash must fail analysis, not CCE at runtime (and not
     // silently widen on the codegen path)
     val err = intercept[Exception] {
@@ -543,7 +523,6 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("bloom_might_contain agrees with the JVM probe through SQL/codegen") {
-    GraftFunctions.register(spark)
     val agg = new graft.functions.BloomFilterAgg(1 << 12)
     val bits = (0L until 200L).foldLeft(agg.zero)(agg.reduce)
     val df = (0L until 400L).toDF("h").withColumn("bf", lit(bits))
@@ -557,38 +536,9 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("cosine_sim: null propagation") {
-    GraftFunctions.register(spark)
     val df = Seq((Some(Array(1f, 2f)), None: Option[Array[Float]]))
       .toDF("a", "b")
     assert(df.select(expr("cosine_sim(a, b)")).head().isNullAt(0))
-  }
-
-  test("register: a pre-existing FOREIGN binding of a graft name is " +
-      "replaced, and repeat calls stay silent no-ops") {
-    // a fresh session (own functionRegistry) where someone already
-    // bound 'hash60': graft's first register must RECLAIM the name —
-    // every query self-registers assuming graft semantics, so a
-    // foreign implementation silently winning would corrupt results
-    GraftFunctions.register(spark)
-    val s2 = spark.newSession()
-    s2.udf.register("hash60",
-      (x: String) => -1L) // the impostor: constant regardless of input
-    assert(s2.sql("SELECT hash60('abc')").head().getLong(0) == -1L)
-    GraftFunctions.register(s2)
-    val expected = spark.sql("SELECT hash60('abc')").head().getLong(0)
-    assert(s2.sql("SELECT hash60('abc')").head().getLong(0) == expected,
-      "graft's register must replace the foreign binding")
-    // second call is a no-op (doesn't throw, doesn't re-replace)
-    GraftFunctions.register(s2)
-    assert(s2.sql("SELECT hash60('abc')").head().getLong(0) == expected)
-    // a foreign rebinding AFTER a successful register must also lose
-    // on the next register call — the guard is binding identity, not
-    // a once-per-session flag
-    s2.udf.register("hash60", (x: String) => -2L)
-    assert(s2.sql("SELECT hash60('abc')").head().getLong(0) == -2L)
-    GraftFunctions.register(s2)
-    assert(s2.sql("SELECT hash60('abc')").head().getLong(0) == expected,
-      "a post-hoc foreign rebinding must not survive re-registration")
   }
 
   test("registerUdaf: repeat calls keep the same binding; a foreign " +

@@ -195,7 +195,6 @@ class ImagePipelineSpec extends SparkSpec {
     assert(DHash64.hash(inc, 9, 8, 3) == null)  // 72 != 9*8*3
     // the SQL surface agrees with the direct call and yields NULL (not
     // a task kill) on the invalid row
-    graft.functions.GraftFunctions.register(spark)
     val out = Seq((inc, 9, 8, 1), (inc, 9, 7, 1))
       .toDF("d", "w", "h", "c")
       .selectExpr("dhash64(d, w, h, c) AS hsh").collect()

@@ -6,13 +6,12 @@ import java.nio.file.{Files, Path}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path => HPath}
 import org.apache.hadoop.fs.permission.FsPermission
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.util.GraftLocalFileSystem
 
 /** graft's local filesystem writes the same modes as Hadoop's, without a
   * `chmod` process, and GraftSession installs it. */
-class LocalFsSpec extends AnyFunSuite with TempDirs {
+class LocalFsSpec extends SparkSpec {
 
   private def mode(p: Path): Int =
     Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff
@@ -66,33 +65,10 @@ class LocalFsSpec extends AnyFunSuite with TempDirs {
   }
 
   test("under GraftSession, FileSystem.get(file:///) is graft's") {
-    // A fresh JVM: the test JVM's shared session is not a GraftSession,
-    // and Hadoop caches one FileSystem per scheme for the process.
-    val javaBin = Path.of(System.getProperty("java.home"), "bin", "java")
-    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.toArray.map(_.toString)
-      .filterNot(a => a.startsWith("-Xm") || a.contains("agent"))
-    val cmd = Seq(javaBin.toString) ++ jvmArgs ++ Seq("-Xmx512m",
-      "-Dspark.ui.enabled=false", "-cp", System.getProperty("java.class.path"),
-      "graft.LocalFsProbe")
-    val log = tempDir("fs-probe").resolve("out.txt")
-    val proc = new ProcessBuilder(cmd: _*)
-      .redirectErrorStream(true).redirectOutput(log.toFile).start()
-    assert(proc.waitFor() == 0, Files.readString(log))
-    val out = Files.readString(log)
-    assert(out.contains(s"file-fs=${classOf[GraftLocalFileSystem].getName}"),
-      out)
-  }
-}
-
-/** Prints the class serving `file:///` in a GraftSession. */
-object LocalFsProbe {
-  def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local(1)
-    try {
-      val fs = FileSystem.get(URI.create("file:///"),
-        spark.sparkContext.hadoopConfiguration)
-      println(s"file-fs=${fs.getClass.getName}")
-    } finally spark.stop()
+    // the shared test session is built by GraftSession.builder, so every
+    // file the suites write goes through graft's FS, as in Verify/Bench
+    val fs = FileSystem.get(URI.create("file:///"),
+      spark.sparkContext.hadoopConfiguration)
+    assert(fs.isInstanceOf[GraftLocalFileSystem], fs.getClass.getName)
   }
 }

@@ -12,8 +12,6 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 class PlanAuditSpec extends SparkSpec {
 
   // q11: declared cross-join semantics (bounded tiny side)
-  // q12_range_join: declared non-equi BNLJ demo (bucketed twin is the
-  //   scale shape and is PlanSpec-guarded)
   // q61/q50/q53/q57/q60/q83: 1-row scalar-aggregate broadcast cross
   //   (n_docs, total counts, funnel numerator/denominator) — constant
   //   fan-out, not a pair explosion
@@ -23,8 +21,8 @@ class PlanAuditSpec extends SparkSpec {
   // q96/q97/q106/q108: the totals scalar is ONE broadcast row
   // (q93's bloom arrives as a scalar subquery, not a cross join, so it
   //  needs no BNLJ exemption)
-  private val bnljAllowed = Set("q11_cross_join", "q12_range_join",
-    "q61_tfidf", "q50_ivf_kmeans", "q53_profile", "q57_stats",
+  private val bnljAllowed = Set("q11_cross_join", "q61_tfidf",
+    "q50_ivf_kmeans", "q53_profile", "q57_stats",
     "q60_funnel", "q83_funnel_steps", "q84_rfm_segments",
     "q34_cosine_topk", "q58_gap_fill", "q88_equidepth_hist",
     "q89_ann_recall", "q91_zorder_layout", "q96_psi_drift",

@@ -3,17 +3,17 @@ package graft
 /** Checked-in operator-multiset digests (graft.Explain.operatorDigest)
   * of the FINAL adaptive physical plans for the most expensive bench
   * queries, at the test fixture scale (sf0.001, local[4], 4 shuffle
-  * partitions — the SparkSpec session; note the naive q12 form pins its
-  * declared BNLJ demo shape here because the RangeJoinRule rewrite only
-  * installs under GraftSession).
+  * partitions — the SparkSpec session, a GraftSession like Verify's and
+  * Bench's, so these are the plans the drivers run).
   *
   * PlanAuditSpec fails when a digest drifts: a silent plan regression
   * (an extra scan, a lost exchange reuse, a join strategy flip — the
   * round-7 q73 class) then surfaces at build time instead of in the
   * driver bench. If a change is INTENTIONAL: regenerate the entry
-  * (`runMain graft.Explain <query> -digest` prints the row, or copy the
-  * actual from the test failure) AND record what changed and why in
-  * IMPLEMENTATION.md — the digest is a tripwire, not a lock.
+  * (`runMain graft.Explain <query> -digest` prints the row in this
+  * setting, or copy the actual from the test failure) AND record what
+  * changed and why in IMPLEMENTATION.md — the digest is a tripwire, not
+  * a lock.
   *
   * Queries whose expensive work hides behind a checkpoint barrier
   * (q67/q102: the CC loop; parts of q103/q104) pin only the visible
@@ -119,8 +119,11 @@ object PlanDigests {
     // Parallelism.widen spread of the month-slice probe side (the
     // heavy join+expand work ran on the single-row-group scan's one
     // task; at scale widen no-ops and the r14 shape returns)
+    // The naive q12 form is rewritten by RangeJoinRule (GraftExtensions)
+    // into the bucketed twin's shape: Generate + BroadcastHashJoin, no
+    // BroadcastNestedLoopJoin
     "q12_range_join" ->
-      "AQEShuffleRead x3 | BroadcastExchange x1 | BroadcastNestedLoopJoin x1 | ColumnarToRow x2 | Exchange x4 | Filter x2 | HashAggregate x4 | Project x2 | Scan parquet x2 | Sort x1",
+      "AQEShuffleRead x3 | BroadcastExchange x1 | BroadcastHashJoin x1 | ColumnarToRow x2 | Exchange x4 | Filter x3 | Generate x1 | HashAggregate x4 | Project x2 | Scan parquet x2 | Sort x1",
     "q12_range_join_bucketed" ->
       "AQEShuffleRead x3 | BroadcastExchange x1 | BroadcastHashJoin x1 | ColumnarToRow x2 | Exchange x4 | Filter x3 | Generate x1 | HashAggregate x4 | Project x3 | Scan parquet x2 | Sort x1",
     "q37_ngram_jaccard" ->

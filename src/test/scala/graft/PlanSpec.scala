@@ -214,9 +214,10 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q12 bucketed twin stays a hash join (the scale-safe shape)") {
-    // q12_range_join is the declared BNLJ semantics demo; the bucketed
-    // twin is the shape to use at 100x. Guard against an optimizer or
-    // refactor regression silently degrading it back to nested-loop.
+    // q12_range_join states the join naively (RangeJoinRule rewrites
+    // it); the bucketed twin writes the 100x shape by hand. Guard
+    // against an optimizer or refactor regression silently degrading it
+    // back to nested-loop.
     val p = finalPlan("q12_range_join_bucketed")
     assert(p.contains("HashJoin"), "weekly-bucket equi-join must hash-join")
     assert(!p.contains("BroadcastNestedLoopJoin"),

@@ -385,7 +385,6 @@ class PropertySpec extends SparkSpec {
     // native and its SQL twin (or a fixture blind spot — empty arrays,
     // negatives, all-equal values) still gets caught. One DataFrame per
     // family keeps it at four Spark jobs total.
-    graft.functions.GraftFunctions.register(spark)
 
     // sorted_intersect_count: |a ∩ b| over sorted-distinct ARRAY<BIGINT>
     val pairGen = for {
@@ -648,7 +647,6 @@ class PropertySpec extends SparkSpec {
     // two laws the near-dup families lean on: positive-INTEGER-gain
     // invariance of audiofp64 on grid-exact samples, and NULL (never
     // throw) degradation for every invalid shape.
-    graft.functions.GraftFunctions.register(spark)
 
     // dhash64: random (w, h, c) with random bytes; ~1 in 5 rows get a
     // deliberately wrong buffer length and must return NULL

@@ -2,23 +2,19 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.plans.RangeJoinRule
+
 /** The static-span interval-join rewrite (plans/RangeJoinRule): fires
   * on `ts >= lo AND ts <= lo + INTERVAL C` shapes (bucketed equi-join,
   * no nested loop), bails on month spans / extra conjuncts, and
   * preserves results exactly — including rows on both interval
-  * boundaries, cross-bucket pairs, and null endpoints. Injected via
-  * extraOptimizations so the shared test session stays extension-free
-  * for the other suites (the GraftSession used by Verify/Bench gets it
-  * from GraftExtensions).
+  * boundaries, cross-bucket pairs, and null endpoints. The shared
+  * session gets the rule from GraftExtensions, as Verify and Bench do;
+  * rule-off baselines exclude it through
+  * `spark.sql.optimizer.excludedRules`.
   */
 class RangeJoinRuleSpec extends SparkSpec {
   import spark.implicits._
-
-  private def withRule[A](body: => A): A = {
-    spark.experimental.extraOptimizations = Seq(graft.plans.RangeJoinRule)
-    try body
-    finally spark.experimental.extraOptimizations = Nil
-  }
 
   // events: on-boundary rows (ts == lo, ts == lo + 7d), a cross-bucket
   // pair (Jan 3 vs the Jan 1 interval spans epoch-week buckets), a
@@ -41,56 +37,52 @@ class RangeJoinRuleSpec extends SparkSpec {
     df.collect().map(r => (r.getLong(0), r.getLong(2))).toSet
 
   test("static-span interval join becomes a bucketed equi-join") {
-    val plain = pairs(joined)
+    val plain = withoutRule(RangeJoinRule) {
+      assert(!joined.queryExecution.optimizedPlan.toString
+        .contains("Generate"), "the excluded rule must not fire")
+      pairs(joined)
+    }
     assert(plain == Set((1L, 10L), (2L, 10L), (3L, 10L), (3L, 20L),
       (4L, 20L)), "fixture sanity: boundaries in, far rows out")
-    withRule {
-      val df = joined
-      val opt = df.queryExecution.optimizedPlan.toString
-      assert(opt.contains("Generate"), s"expected the bucket explode:\n$opt")
-      df.collect()
-      val phys = df.queryExecution.executedPlan.toString
-      assert(!phys.contains("BroadcastNestedLoopJoin") &&
-        !phys.contains("CartesianProduct"),
-        s"rewrite must remove the nested loop:\n$phys")
-      assert(pairs(df) == plain, "rewrite must be lossless")
-    }
+    val df = joined
+    val opt = df.queryExecution.optimizedPlan.toString
+    assert(opt.contains("Generate"), s"expected the bucket explode:\n$opt")
+    df.collect()
+    val phys = df.queryExecution.executedPlan.toString
+    assert(!phys.contains("BroadcastNestedLoopJoin") &&
+      !phys.contains("CartesianProduct"),
+      s"rewrite must remove the nested loop:\n$phys")
+    assert(pairs(df) == plain, "rewrite must be lossless")
   }
 
   test("strict bounds fire too; result parity holds") {
     def strict = ev.join(iv, col("ts") > col("lo") &&
       col("ts") < col("lo") + expr("INTERVAL 7 DAYS"))
-    val plain = pairs(strict)
-    withRule {
-      val df = strict
-      assert(df.queryExecution.optimizedPlan.toString.contains("Generate"))
-      assert(pairs(df) == plain)
-    }
+    val plain = withoutRule(RangeJoinRule)(pairs(strict))
+    val df = strict
+    assert(df.queryExecution.optimizedPlan.toString.contains("Generate"))
+    assert(pairs(df) == plain)
   }
 
   test("non-positive spans bail") {
-    withRule {
-      val neg = ev.join(iv, col("ts") >= col("lo") &&
-        col("ts") <= col("lo") + expr("INTERVAL -7 DAYS"))
-      assert(!neg.queryExecution.optimizedPlan.toString.contains("Generate"),
-        "a negative span has no bucket width — must not rewrite")
-    }
+    val neg = ev.join(iv, col("ts") >= col("lo") &&
+      col("ts") <= col("lo") + expr("INTERVAL -7 DAYS"))
+    assert(!neg.queryExecution.optimizedPlan.toString.contains("Generate"),
+      "a negative span has no bucket width — must not rewrite")
   }
 
   test("month spans and extra conjuncts bail") {
-    withRule {
-      val month = ev.join(iv, col("ts") >= col("lo") &&
-        col("ts") <= col("lo") + expr("INTERVAL 1 MONTH"))
-      assert(!month.queryExecution.optimizedPlan.toString
-        .contains("Generate"),
-        "month spans have no fixed width — must not rewrite")
-      val extra = ev.join(iv, col("id") === col("iid") &&
-        col("ts") >= col("lo") &&
-        col("ts") <= col("lo") + expr("INTERVAL 7 DAYS"))
-      assert(!extra.queryExecution.optimizedPlan.toString
-        .contains("Generate"),
-        "an existing equi-conjunct already hash-joins — must not rewrite")
-    }
+    val month = ev.join(iv, col("ts") >= col("lo") &&
+      col("ts") <= col("lo") + expr("INTERVAL 1 MONTH"))
+    assert(!month.queryExecution.optimizedPlan.toString
+      .contains("Generate"),
+      "month spans have no fixed width — must not rewrite")
+    val extra = ev.join(iv, col("id") === col("iid") &&
+      col("ts") >= col("lo") &&
+      col("ts") <= col("lo") + expr("INTERVAL 7 DAYS"))
+    assert(!extra.queryExecution.optimizedPlan.toString
+      .contains("Generate"),
+      "an existing equi-conjunct already hash-joins — must not rewrite")
   }
 
   test("timestamp_ntz endpoints fire and stay lossless") {
@@ -100,26 +92,23 @@ class RangeJoinRuleSpec extends SparkSpec {
       .join(iv.select(col("iid"), to_timestamp_ntz(col("lo")).as("lo")),
         col("ts") >= col("lo") &&
         col("ts") <= col("lo") + expr("INTERVAL 7 DAYS"))
-    val plain = pairs(ntz)
-    withRule {
-      val df = ntz
-      assert(df.queryExecution.optimizedPlan.toString.contains("Generate"),
-        "rule must fire on TIMESTAMP_NTZ endpoints")
-      assert(pairs(df) == plain)
-    }
+    val plain = withoutRule(RangeJoinRule)(pairs(ntz))
+    val df = ntz
+    assert(df.queryExecution.optimizedPlan.toString.contains("Generate"),
+      "rule must fire on TIMESTAMP_NTZ endpoints")
+    assert(pairs(df) == plain)
   }
 
   test("q12_range_join itself plans without a nested loop under the rule") {
-    val plain = SparkEntry.queries("q12_range_join")(spark, sf)
-      .collect().map(_.toSeq)
-    withRule {
-      val df = SparkEntry.queries("q12_range_join")(spark, sf)
-      df.collect()
-      val phys = df.queryExecution.executedPlan.toString
-      assert(!phys.contains("BroadcastNestedLoopJoin"),
-        s"the engine must rewrite the declared naive range join:\n$phys")
-      assert(df.collect().map(_.toSeq).toSeq == plain.toSeq,
-        "auto-rewritten q12 must return identical rows")
+    val plain = withoutRule(RangeJoinRule) {
+      SparkEntry.queries("q12_range_join")(spark, sf).collect().map(_.toSeq)
     }
+    val df = SparkEntry.queries("q12_range_join")(spark, sf)
+    df.collect()
+    val phys = df.queryExecution.executedPlan.toString
+    assert(!phys.contains("BroadcastNestedLoopJoin"),
+      s"the engine must rewrite the declared naive range join:\n$phys")
+    assert(df.collect().map(_.toSeq).toSeq == plain.toSeq,
+      "auto-rewritten q12 must return identical rows")
   }
 }

@@ -1,16 +1,16 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.internal.SQLConf
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (one per suite, lazy), and
-  * per-test temp trees ([[TempDirs]]). */
+/** Shared local session for all suites (one per suite, lazy), built by
+  * [[GraftSession.builder]] like Verify and Bench, and per-test temp
+  * trees ([[TempDirs]]). */
 trait SparkSpec extends AnyFunSuite with TempDirs {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  lazy val spark: SparkSession = GraftSession.builder("local[4]", 4)
     .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
@@ -19,4 +19,12 @@ trait SparkSpec extends AnyFunSuite with TempDirs {
 
   def rows(name: String): Long =
     SparkEntry.queries(name)(spark, sf).count()
+
+  /** Runs `body` with `rule` excluded from the optimizer: the rule-off
+    * baseline of a rule GraftExtensions installs. */
+  def withoutRule[A](rule: Rule[_])(body: => A): A = {
+    spark.conf.set(SQLConf.OPTIMIZER_EXCLUDED_RULES.key, rule.ruleName)
+    try body
+    finally spark.conf.unset(SQLConf.OPTIMIZER_EXCLUDED_RULES.key)
+  }
 }

@@ -256,7 +256,6 @@ class TextSimilaritySpec extends SparkSpec {
     // 42 of 50 over probes 1..10 on this fixture), so recall gets a
     // floor, not an ordering: both arms must stay >= 80%.
     val d = "/root/testdata/sf0.01"
-    graft.functions.GraftFunctions.register(spark)
     val e = Tables.load(spark, d, "embeddings")
       .select($"vec_id", $"embedding")
     val el = e.select($"vec_id", posexplode($"embedding"))
