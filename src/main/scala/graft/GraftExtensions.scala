@@ -6,13 +6,14 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import graft.functions.GraftFunctions
 
 /** Session-extensions installer, and the only way graft installs into
-  * a session: makes graft's native expressions first-class SQL
-  * functions, graft's custom physical operators plannable and its
-  * optimizer rules active, on any session built with
-  * `spark.sql.extensions=graft.GraftExtensions` (or
-  * `.withExtensions(new GraftExtensions)`, as [[GraftSession.builder]]
+  * a session: makes graft's SQL functions (the native expressions,
+  * q93's `bloom_agg_1m` and the `img_*` image UDFs) resolvable, graft's
+  * custom physical operators plannable and its optimizer rules active,
+  * on any session built with `spark.sql.extensions=graft.GraftExtensions`
+  * (or `.withExtensions(new GraftExtensions)`, as [[GraftSession.builder]]
   * does). A session built without it resolves none of graft's SQL
-  * functions and plans no `AsOfJoinPlan.asof`.
+  * functions and plans no `AsOfJoinPlan.asof`; one that rebinds a name
+  * (a UDF or temp function of its own) keeps its own binding.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

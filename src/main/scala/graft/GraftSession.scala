@@ -7,10 +7,13 @@ import org.apache.spark.sql.SparkSession
   * runs with. Verify, Bench, Explain, DiagStages and the test suites'
   * shared session all build through [[builder]]:
   *
-  *  - GraftExtensions installed: graft's native SQL functions, the
+  *  - GraftExtensions installed: all of graft's SQL functions, the
   *    as-of join planner strategy, and the TopOnePerKey and RangeJoin
   *    optimizer rules;
   *  - UTC session timezone — every date_format/window oracle assumes it;
+  *  - `spark.sql.legacy.parquet.nanosAsLong`: the older TIMESTAMP(NANOS)
+  *    `events.ts` layout reads as a long (which `Tables.load` and
+  *    `eventsStream` convert) instead of failing;
   *  - shuffle partitions sized to the cluster (caller-provided;
   *    local[N] should pass N, a real cluster ~2-3x its total cores —
   *    AQE coalesces down from there at runtime);
@@ -19,9 +22,9 @@ import org.apache.spark.sql.SparkSession
   *  - `file://` served by [[graft.util.GraftLocalFileSystem]] (same
   *    modes as Hadoop's, no `chmod` process per written file).
   *
-  * `Tables.load` handles the nanos-timestamp parquet quirk per read and
-  * resolves each table's schema once per session (it caches the
-  * inferred schema per file version); neither needs session config.
+  * This is the whole setup: no query, table load or stream changes a
+  * session's functions or conf while it runs. A session built another
+  * way must carry GraftExtensions and set `nanosAsLong` itself.
   */
 object GraftSession {
 
@@ -31,6 +34,7 @@ object GraftSession {
       .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // r16: the default codegen class cache holds 100 entries (static
       // conf) — a multi-query workload (the 160-entry bench, any
       // dashboard fanning out dozens of distinct plans) evicts every

@@ -18,8 +18,8 @@ import org.apache.spark.sql.types.{DecimalType, StructType}
   * loads read with that schema declared. A rewritten file changes its
   * length or mtime and is inferred again; a same-length rewrite within
   * the filesystem's mtime resolution is NOT detected. Sessions never
-  * share entries (inference depends on session conf such as
-  * `spark.sql.legacy.parquet.nanosAsLong`); a parquet conf changed
+  * share entries (inference depends on session conf such as the
+  * legacy parquet nanos-as-long setting); a parquet conf changed
   * mid-session after a table was loaded is not seen by that table
   * until its file changes. Directories and missing paths infer on
   * every load, so a missing table fails with Spark's usual
@@ -61,18 +61,15 @@ object Tables {
 
   private def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
+  /** Table `name` under `dir`. `events.ts` comes back as TimestampType
+    * from either layout the fixtures have used: TIMESTAMP(NANOS), read
+    * as a nanos long (microsecond values, so the division is exact), or
+    * TIMESTAMP(MICROS) without UTC adjustment (TIMESTAMP_NTZ). Changes
+    * no session conf: the nanos read and a value-preserving NTZ cast
+    * need the confs [[GraftSession.builder]] sets. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    if (name == "events") {
-      // Fixture layouts observed across driver generations: events.ts as
-      // parquet TIMESTAMP(NANOS) (Spark rejects it outright -> read as a
-      // nanos-since-epoch long and convert; values carry microsecond
-      // precision, so the division is exact) or as TIMESTAMP(MICROS)
-      // without UTC adjustment (Spark reads TIMESTAMP_NTZ). Both
-      // normalize to TimestampType here; the session timezone is pinned
-      // to UTC, so the NTZ cast is value-preserving.
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      tsToTimestamp(read(spark, path(dir, name)))
-    } else read(spark, path(dir, name))
+    if (name == "events") tsToTimestamp(read(spark, path(dir, name)))
+    else read(spark, path(dir, name))
 
   /** `compute` once per session and file version (a directory or a
     * missing path computes on every call). */
@@ -114,10 +111,6 @@ object Tables {
     * first read of a table it re-reads no footer and starts no job. */
   def register(spark: SparkSession, dir: String, which: String*): Unit =
     which.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
-
-  /** Register every table as a temp view. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    register(spark, dir, names: _*)
 }
 
 /** Determinism helpers (SURVEY.md §2-B determinism rules).

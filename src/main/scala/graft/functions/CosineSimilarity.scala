@@ -1,9 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.graftshim.GraftSqlShim
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native codegen'd cosine similarity over two vector columns — each
@@ -131,9 +133,10 @@ object CosineSimilarity {
 }
 
 object GraftFunctions {
-  /** graft's native SQL functions: name -> (expression class, builder).
-    * graft.GraftExtensions injects every entry into each session it
-    * installs into, so `expr("cosine_sim(a, b)")` etc. resolve there. */
+  /** graft's SQL functions: name -> (implementing class, builder) — the
+    * native expressions, q93's typed-Aggregator `bloom_agg_1m` and the
+    * `img_*` UDFs of graft.pipeline.ImageUDFs. graft.GraftExtensions
+    * injects them all into every session it installs into. */
   val all: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
     ("cosine_sim", classOf[CosineSimilarity],
       (exprs: Seq[Expression]) => CosineSimilarity(exprs.head, exprs(1))),
@@ -164,44 +167,11 @@ object GraftFunctions {
     ("audiofp64", classOf[AudioFp64],
       (exprs: Seq[Expression]) => AudioFp64(exprs.head)),
     ("dot128", classOf[Dot128],
-      (exprs: Seq[Expression]) => Dot128(exprs.head, exprs(1))))
-
-  /** Per-(session, name) record of the registry builder a
-    * [[registerUdaf]] call installed, so repeat calls can recognize
-    * their own binding by identity. Weak keys: a retired session must
-    * not be pinned by this cache. */
-  private val udafBound =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, AnyRef]]()
-
-  /** Idempotently register a typed-Aggregator SQL function (e.g. q93's
-    * `bloom_agg_1m`). `spark.udf.register` synthesizes a fresh registry
-    * builder per call, so the native expressions' builder-identity
-    * check can't apply directly; instead the builder the registry holds
-    * right after registration is remembered per session, and later
-    * calls are silent no-ops only while that exact binding is still
-    * live. A foreign binding of the name — made before or after a
-    * previous call — fails the identity check and is reclaimed. A typed
-    * Aggregator has no `injectFunction` form, so this is the one
-    * function a query registers itself.
-    */
-  def registerUdaf(spark: SparkSession, name: String,
-      udf: => org.apache.spark.sql.expressions.UserDefinedFunction): Unit =
-    synchronized {
-      val reg = spark.sessionState.functionRegistry
-      val id = org.apache.spark.sql.catalyst.FunctionIdentifier(name)
-      val mine = Option(udafBound.get(spark)).flatMap(_.get(name))
-      val live = reg.lookupFunctionBuilder(id)
-      if (!mine.exists(m => live.exists(_ eq m))) {
-        spark.udf.register(name, udf)
-        reg.lookupFunctionBuilder(id).foreach { b =>
-          var m = udafBound.get(spark)
-          if (m == null) {
-            m = scala.collection.mutable.Map.empty[String, AnyRef]
-            udafBound.put(spark, m)
-          }
-          m.update(name, b.asInstanceOf[AnyRef])
-        }
-      }
-    }
+      (exprs: Seq[Expression]) => Dot128(exprs.head, exprs(1))),
+    // q93's filter: 2^20 bits = 128 KiB, ~35 bits/key at sf0.1's ~30k
+    // urgent orders (FP ~1.5e-5 at K=6 — see BloomFilter.K); sized for
+    // the BUILD side's key count, not the probe side's row count
+    ("bloom_agg_1m", classOf[BloomFilterAgg],
+      GraftSqlShim.udfBuilder("bloom_agg_1m", udaf(new BloomFilterAgg(1 << 20),
+        Encoders.scalaLong)))) ++ graft.pipeline.ImageUDFs.all
 }

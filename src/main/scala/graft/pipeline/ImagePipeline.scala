@@ -86,7 +86,7 @@ object ImagePipeline {
   def seededShuffle(df: DataFrame, keyCol: String, seed: Long): DataFrame =
     df.orderBy(xxhash64(lit(seed), col(keyCol)), col(keyCol))
 
-  /** A26: positional train/val split after a seeded shuffle — the
+  /** A26: positional train/val split after [[seededShuffle]] — the
     * reference splits by position (not Bernoulli), clamping at least one
     * row per side. Returns (train, val).
     *
@@ -102,7 +102,7 @@ object ImagePipeline {
     val n = df.count()
     val cut0 = math.ceil(trainFrac * n).toLong
     val cut = math.max(1L, math.min(n - 1, cut0)) // >= 1 per side
-    val sorted = df.orderBy(xxhash64(lit(seed), col(keyCol)), col(keyCol))
+    val sorted = seededShuffle(df, keyCol, seed)
     val posSchema = sorted.schema
       .add("__pos", org.apache.spark.sql.types.LongType, nullable = false)
     // Materialize.truncate: the train and val filters are two separate

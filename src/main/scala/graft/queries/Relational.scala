@@ -759,15 +759,9 @@ object Relational {
     // meant to protect; PlanSpec pins the correct Filter-on-scan
     // placement). The probe (bloom_might_contain,
     // functions/BloomFilter.scala) is native and codegen'd, so the
-    // prune lives inside the scan's whole-stage-codegen span.
+    // prune lives inside the scan's whole-stage-codegen span. The
+    // filter's aggregate, bloom_agg_1m, is one of GraftFunctions.all.
     "q93_bloom_prune" -> ((s, d) => {
-      // 2^20 bits = 128 KiB: ~35 bits/key at sf0.1's ~30k urgent
-      // orders (FP ~1.5e-5 at K=6 — see BloomFilter.K); size the
-      // filter for the BUILD side's key count, not the probe side's
-      // row count
-      graft.functions.GraftFunctions.registerUdaf(s, "bloom_agg_1m",
-        udaf(new graft.functions.BloomFilterAgg(1 << 20),
-          org.apache.spark.sql.Encoders.scalaLong))
       Tables.register(s, d, "orders", "lineitem")
       s.sql(s"""
         WITH sel AS (SELECT o_orderkey FROM orders

@@ -34,7 +34,7 @@ object StreamingWindows {
     StructField("props", StringType)))
 
   /** Legacy layout: ts as nanos-since-epoch long (TIMESTAMP(NANOS)
-    * read under nanosAsLong). */
+    * read as a long, as sessions from GraftSession.builder read it). */
   private[graft] val nanosSchema = StructType(
     ntzSchema.map(f => if (f.name == "ts") f.copy(dataType = LongType)
       else f))
@@ -49,11 +49,12 @@ object StreamingWindows {
     * the on-disk footers with a one-off batch read so the stream adapts
     * to whichever physical ts layout the fixture generation used
     * (nanos-long or TIMESTAMP(_NTZ) — see Tables.tsToTimestamp, shared
-    * with the batch loader so both sides see the identical column). */
+    * with the batch loader so both sides see the identical column). Sets
+    * no session conf: the nanos layout reads only under the nanos-as-long
+    * parquet conf [[graft.GraftSession.builder]] sets. */
   def eventsStream(spark: SparkSession, dir: String,
       maxFilesPerTrigger: Int = 0,
       emptyDirFallback: StructType = ntzSchema): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // the streaming file source wants a directory: scan the SF dir with a
     // glob picking just the events file(s). The wide events*.parquet glob
     // is ONLY for the multi-batch arrival harness (maxFilesPerTrigger > 0,

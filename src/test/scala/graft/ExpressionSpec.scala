@@ -282,9 +282,6 @@ class ExpressionSpec extends SparkSpec {
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, "CODEGEN_ONLY")
     try {
-      spark.udf.register("bloom_agg_tiny",
-        udaf(new graft.functions.BloomFilterAgg(1 << 10),
-          org.apache.spark.sql.Encoders.scalaLong))
       val row = Seq((Seq(1f, 2f, 0.5f), Seq(0.5f, 1f, 2f),
           Seq("alpha", "beta", "gamma", "delta"),
           Seq(1L, 4L, 9L), Seq(4L, 9L, 12L),
@@ -317,7 +314,7 @@ class ExpressionSpec extends SparkSpec {
       // the bloom probe expression, against real aggregate-built bytes
       spark.range(0, 50).createOrReplaceTempView("cg_keys")
       val hits = spark.sql(
-        """WITH bf AS (SELECT bloom_agg_tiny(xxhash64(id)) AS b
+        """WITH bf AS (SELECT bloom_agg_1m(xxhash64(id)) AS b
                        FROM cg_keys)
            SELECT count(*) FROM cg_keys
            WHERE bloom_might_contain((SELECT b FROM bf), xxhash64(id))""")
@@ -455,13 +452,14 @@ class ExpressionSpec extends SparkSpec {
   test("GraftExtensions installs into SparkSessionExtensions") {
     val e = new org.apache.spark.sql.SparkSessionExtensions
     new GraftExtensions().apply(e)  // must register without throwing
-    // GraftExtensions injects GraftFunctions.all — pin the full set here
-    // so adding an expression without listing it fails a test
+    // pin the full set GraftExtensions injects, so adding a function
+    // without listing it fails a test
     assert(GraftFunctions.all.map(_._1).toSet == Set("cosine_sim",
       "simhash64", "simhash_md5", "hash60", "mix61", "shingles3",
       "minhash_bands", "pair_combos", "bloom_might_contain",
       "sorted_intersect_count", "jl_project", "dhash64", "audiofp64",
-      "dot128"))
+      "dot128", "bloom_agg_1m", "img_resize", "img_flip", "img_rotate",
+      "img_jitter", "img_jpeg", "img_tensor_chw"))
   }
 
   test("sorted_intersect_count: equals size(array_intersect) on sorted sets") {
@@ -539,39 +537,5 @@ class ExpressionSpec extends SparkSpec {
     val df = Seq((Some(Array(1f, 2f)), None: Option[Array[Float]]))
       .toDF("a", "b")
     assert(df.select(expr("cosine_sim(a, b)")).head().isNullAt(0))
-  }
-
-  test("registerUdaf: repeat calls keep the same binding; a foreign " +
-      "rebinding is reclaimed (the q93 bloom_agg registration path)") {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    val s2 = spark.newSession()
-    val id = FunctionIdentifier("bloom_agg_test")
-    def udafFn = org.apache.spark.sql.functions.udaf(
-      new graft.functions.BloomFilterAgg(1 << 10),
-      org.apache.spark.sql.Encoders.scalaLong)
-    def bound = s2.sessionState.functionRegistry.lookupFunctionBuilder(id)
-    GraftFunctions.registerUdaf(s2, "bloom_agg_test", udafFn)
-    val first = bound
-    assert(first.isDefined, "first call must bind the name")
-    // repeat call: silent no-op — the registry binding is IDENTICALLY
-    // the one the first call installed (no 'replaced a previously
-    // registered function' warn per query invocation)
-    GraftFunctions.registerUdaf(s2, "bloom_agg_test", udafFn)
-    assert(bound.exists(b => first.exists(_ eq b)),
-      "repeat registerUdaf must not re-replace its own live binding")
-    // the function actually works through SQL
-    val bf = s2.sql(
-      "SELECT bloom_agg_test(xxhash64(cast(id as string))) FROM range(50)")
-      .head().getAs[Array[Byte]](0)
-    assert(bf.length == (1 << 10) / 8 && bf.exists(_ != 0))
-    // a foreign rebinding AFTER registration loses on the next call —
-    // identity guard, not once-per-session
-    s2.udf.register("bloom_agg_test", (x: Long) => x)
-    GraftFunctions.registerUdaf(s2, "bloom_agg_test", udafFn)
-    val re = s2.sql(
-      "SELECT bloom_agg_test(xxhash64(cast(id as string))) FROM range(50)")
-      .head().getAs[Array[Byte]](0)
-    assert(re.length == (1 << 10) / 8,
-      "a post-hoc foreign rebinding must be reclaimed as the aggregate")
   }
 }

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 /** Typed/image pipeline tests on <=8x8 synthetic fixtures (FIXTURES.md
   * §2): decode fast path + encoded fallback, INTER_AREA-analog resize,
   * seeded flip determinism, rotate, jitter clamping, JPEG q95 roundtrip,
-  * tensor conversion + ImageNet normalize, positional split clamping,
-  * batching, accuracy/argmax, and the multimodal stubs.
+  * tensor + ImageNet normalize, seeded shuffle, positional split, folder
+  * read, batching, accuracy/argmax, image UDFs and the multimodal stubs.
   */
 class ImagePipelineSpec extends SparkSpec {
   import spark.implicits._
@@ -157,7 +157,6 @@ class ImagePipelineSpec extends SparkSpec {
   }
 
   test("img_resize rejects a negative target size, naming the row") {
-    graft.pipeline.ImageUDFs.register(spark)
     val g = gradient(8, 8)
     Seq((g.data, g.height, g.width, g.nChannels)).toDF("d", "h", "w", "c")
       .createOrReplaceTempView("imgs_neg")
@@ -426,6 +425,36 @@ class ImagePipelineSpec extends SparkSpec {
     assert(tr.count() == 80 && va.count() == 20)
   }
 
+  test("seeded shuffle: a permutation, fixed per seed, different across seeds") {
+    val df = (1 to 50).toDF("id")
+    def order(seed: Long) =
+      ImagePipeline.seededShuffle(df, "id", seed).as[Int].collect().toSeq
+    val s42 = order(42)
+    assert(s42.sorted == (1 to 50), "rows must be permuted, not changed")
+    assert(s42 != (1 to 50), "the order must not be the input order")
+    assert(order(42) == s42, "the same seed must give the same order")
+    assert(order(7) != s42, "another seed must give another order")
+  }
+
+  test("image folder read (A1/A5): parent-dir label, image globs only, " +
+      "recursive") {
+    val root = tempDir("graft_folder")
+    val kept = Seq("catA/a.jpg", "catA/b.jpeg", "catB/c.png", "catB/d.bmp",
+      "catC/deep/e.gif")
+    (kept ++ Seq("catA/notes.txt", "catB/f.tiff", "catC/g.jpg.bak")).foreach {
+      rel => val f = root.resolve(rel)
+        java.nio.file.Files.createDirectories(f.getParent)
+        java.nio.file.Files.write(f, rel.getBytes("UTF-8"))
+    }
+    // (path under root, label, content): the label is the file's parent
+    // directory, however deep the file sits
+    val got = ImagePipeline.readImageFolder(spark, root.toString).collect()
+      .map(r => (r.getString(0).stripPrefix(s"file:$root/"),
+        r.getString(1), new String(r.getAs[Array[Byte]](2), "UTF-8"))).toSet
+    assert(got == kept.map(rel =>
+      (rel, rel.split('/').init.last, rel)).toSet)
+  }
+
   test("batching groups per partition without shuffle") {
     val ds = spark.range(0, 20).repartition(2).as[Long]
     val batches = ImagePipeline.batched(ds, 4).collect()
@@ -457,7 +486,6 @@ class ImagePipelineSpec extends SparkSpec {
   }
 
   test("image UDFs compose in SQL and match the direct ops") {
-    graft.pipeline.ImageUDFs.register(spark)
     val g = gradient(8, 8)
     Seq((g.data, g.height, g.width, g.nChannels)).toDF("d", "h", "w", "c")
       .createOrReplaceTempView("imgs")

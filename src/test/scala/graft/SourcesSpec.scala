@@ -83,8 +83,6 @@ class SourcesSpec extends SparkSpec {
       StandardCopyOption.REPLACE_EXISTING)
 
   test("cached schema equals an uncached read for every fixture table") {
-    // the uncached read must see the conf Tables.load sets for events
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     Tables.names.foreach { n =>
       Tables.load(spark, sf, n) // first load: inferred and cached
       val raw = spark.read.parquet(s"$sf/$n.parquet")

@@ -23,9 +23,7 @@ class StreamingSpec extends SparkSpec {
     * them as cuts.size+1 micro-batches. Caller cleans up the dir. */
   private def stageEventsAt(cuts: Seq[Long]): java.io.File = {
     import org.apache.spark.sql.functions.expr
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = graft.Tables.tsToTimestamp(
-      spark.read.parquet(s"$sf/events.parquet"))
+    val raw = graft.Tables.load(spark, sf, "events")
     val dir = tempDir("graft_mb").toFile
     val now = System.currentTimeMillis()
     val n = cuts.size + 1
@@ -45,13 +43,10 @@ class StreamingSpec extends SparkSpec {
 
   /** Evenly-spaced cuts over the fixture's time range (n files). */
   private def stageEventsFiles(n: Int): (java.io.File, Seq[Long]) = {
-    val Array(lo, hi) = {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      graft.Tables.tsToTimestamp(
-          spark.read.parquet(s"$sf/events.parquet"))
+    val Array(lo, hi) =
+      graft.Tables.load(spark, sf, "events")
         .selectExpr("min(unix_micros(ts))", "max(unix_micros(ts))")
         .collect().map(r => Array(r.getLong(0), r.getLong(1))).head
-    }
     val cuts = (1 until n).map(i => lo + (hi - lo) * i / n)
     (stageEventsAt(cuts), cuts)
   }
@@ -109,13 +104,11 @@ class StreamingSpec extends SparkSpec {
     // across the batch boundary collapse, and every finalized day is
     // exact vs a driver-side reference
     import org.apache.spark.sql.functions.{col, expr, lit}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // normalize ts to TimestampType whatever the fixture's physical
+    // Tables.load normalizes ts to TimestampType whatever the fixture's
     // layout (nanos-long or TIMESTAMP_NTZ); the staged split files then
     // carry plain TIMESTAMP and the stream source adapts via the same
-    // helper, so this harness is layout-independent
-    val raw = graft.Tables.tsToTimestamp(
-      spark.read.parquet(s"$sf/events.parquet"))
+    // tsToTimestamp, so this harness is layout-independent
+    val raw = graft.Tables.load(spark, sf, "events")
     val cutUs = 1705363200L * 1000000L // 2024-01-16 00:00:00 UTC
     val dir = tempDir("graft_sd").toFile
     def writeOne(df: org.apache.spark.sql.DataFrame, name: String,
@@ -1429,9 +1422,7 @@ class StreamingSpec extends SparkSpec {
       // first file arrives; the next trigger must ingest it. The
       // default fallback declares the CURRENT fixture layout (ts as
       // TIMESTAMP_NTZ micros), so stage the file in that layout
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val src = graft.Tables.tsToTimestamp(
-        spark.read.parquet(s"$sf/events.parquet"))
+      val src = graft.Tables.load(spark, sf, "events")
         .selectExpr("event_id", "cast(ts as timestamp_ntz) AS ts",
           "user_id", "event_type", "value", "props")
       val tmp = new java.io.File(dir, "stage")
@@ -1460,9 +1451,7 @@ class StreamingSpec extends SparkSpec {
       mode = "update")
     try {
       assert(spark.table("t_empty_n").count() == 0)
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val src = graft.Tables.tsToTimestamp(
-        spark.read.parquet(s"$sf/events.parquet"))
+      val src = graft.Tables.load(spark, sf, "events")
         .selectExpr("event_id", "unix_micros(ts) * 1000 AS ts",
           "user_id", "event_type", "value", "props")
       val tmp = new java.io.File(dir, "stage")
