@@ -5,21 +5,15 @@
 # Compile first (`sbt compile`); then
 #   scripts/run_main.sh graft.Bench
 #   SPARK_GRAFT_ONLY=q99_pq_codes scripts/run_main.sh graft.Bench
-# The --add-opens list mirrors build.sbt (JDK 17 + Spark 4 outside
-# spark-submit); omitting java.base/java.nio kills every Kryo-serialized
-# Aggregator buffer with EXPRESSION_ENCODING_FAILED (round-9 lesson).
+# JVM flags come from the checkout's jvm.flags, the file build.sbt's
+# forked JVMs read (the --add-opens list JDK 17 + Spark 4 need outside
+# spark-submit, and the collector); -Xmx from SPARK_DRIVER_MEM.
 set -euo pipefail
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
+FLAGS=()
+while read -r line; do
+  [[ -z "$line" || "$line" == \#* ]] || FLAGS+=("$line")
+done < "$ROOT/jvm.flags"
 # the classes of the checkout this script sits in
-CLASSES="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)/target/scala-2.13/classes"
-# ParallelGC: the collector build.sbt's forked test JVM and perfbench use
-exec java $ADD_OPENS -XX:+UseParallelGC \
-  -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -cp "$CLASSES:/opt/spark/jars/*" "$@"
+exec java "${FLAGS[@]}" -Xmx"${SPARK_DRIVER_MEM:-8g}" \
+  -cp "$ROOT/target/scala-2.13/classes:/opt/spark/jars/*" "$@"

@@ -33,7 +33,7 @@ object Explain {
     def walk(p: SparkPlan): Unit = p match {
       case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
       case q: QueryStageExec => walk(q.plan)
-      case r: ReusedExchangeExec =>
+      case _: ReusedExchangeExec =>
         counts("ReusedExchange") = counts.getOrElse("ReusedExchange", 0) + 1
       case other =>
         val n = other.nodeName

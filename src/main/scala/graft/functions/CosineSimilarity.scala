@@ -140,8 +140,6 @@ object GraftFunctions {
   val all: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
     ("cosine_sim", classOf[CosineSimilarity],
       (exprs: Seq[Expression]) => CosineSimilarity(exprs.head, exprs(1))),
-    ("simhash64", classOf[Simhash64],
-      (exprs: Seq[Expression]) => Simhash64(exprs.head)),
     ("simhash_md5", classOf[SimhashMd5],
       (exprs: Seq[Expression]) => SimhashMd5(exprs.head)),
     ("hash60", classOf[Hash60],

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** 60-bit simhash over an ARRAY<STRING> token column using an MD5-derived
-  * per-token hash — the cross-engine-verifiable twin of [[Simhash64]].
+  * per-token hash — graft's one simhash.
   *
   * The per-token hash is the integer value of the first 15 hex characters
   * of md5(token) (= the top 60 bits of the digest), which DuckDB
@@ -14,8 +14,8 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * — so the whole fingerprint (bit votes over the token multiset, bit set
   * when votes > 0) has a plain-SQL oracle, unlike xxhash64 which exists
   * only inside Spark. 60 bits (not 64) keeps the value positive in a
-  * signed BIGINT in both engines. Same fused vote loop as Simhash64: one
-  * digest + one 60-iteration loop per token, no per-bit lambdas.
+  * signed BIGINT in both engines. One fused vote loop: one digest + one
+  * 60-iteration loop per token, no per-bit lambdas.
   *
   * Codegen'd as a static call into the companion so the per-document
   * projection stays inside whole-stage codegen.

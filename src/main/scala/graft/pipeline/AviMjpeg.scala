@@ -40,9 +40,6 @@ object AviMjpeg {
   // in-memory streams only — never the per-image temp-file cache
   ImageIoTuning.ensure()
 
-  private def u16(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-
   private def u32(b: Array[Byte], o: Int): Long =
     (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
       ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)

@@ -78,6 +78,7 @@ object Flac {
       val len = ((b(o + 1) & 0xff) << 16) | ((b(o + 2) & 0xff) << 8) |
         (b(o + 3) & 0xff)
       if (first && btype != 0) return None
+      first = false
       if (btype == 0) {
         if (len < 34 || o + 4 + 34 > b.length) return None
         val si = o + 4

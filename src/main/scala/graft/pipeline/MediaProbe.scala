@@ -117,7 +117,7 @@ object MediaProbe {
   // universally published HEADER lookup tables (bitrate/samplerate
   // indices) — container structure, not the Layer III Huffman DATA
   // tables MediaCodec documents as non-derivable.
-  private val V1 = 3; private val V2 = 2; private val V25 = 0 // version field
+  private val V1 = 3; private val V2 = 2 // version field (0 = MPEG 2.5)
   private val brV1 = Array( // kbps by [layer 1..3][index 1..14]
     Array(32, 64, 96, 128, 160, 192, 224, 256, 288, 320, 352, 384, 416, 448),
     Array(32, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320, 384),

@@ -115,7 +115,7 @@ object MsAdpcm {
         // the two seed samples are emitted oldest first
         mono += s2.sum.toDouble / ch / 32768.0
         mono += s1.sum.toDouble / ch / 32768.0
-        var p = b + 7 * ch
+        val p = b + 7 * ch
         var nib = 0 // global nibble counter; channel = nib % ch
         val nNib = (blockEnd - p) * 2
         var acc = 0.0

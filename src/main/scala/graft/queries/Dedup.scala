@@ -12,9 +12,7 @@ import graft.Tables
   * All hash-based ops here use a 60-bit MD5-derived hash (`hash60`) that
   * DuckDB reproduces bit-for-bit, so minhash signatures, LSH candidate
   * pairs and simhash fingerprints all carry full DuckDB oracles on top of
-  * the ScalaTest collision/property tests. (An xxhash64-based Simhash64
-  * expression also ships — ~2-3x cheaper per token — for deployments that
-  * don't need a cross-engine oracle; the LSH structure is identical.)
+  * the ScalaTest collision/property tests.
   *
   * Scale shape: signatures are map-only per document; candidate pairing
   * shuffles on (band, hash) — the classic LSH band-bucket join that keeps

@@ -8,10 +8,9 @@ import org.apache.spark.sql.streaming.{MapState, OutputMode,
 /** Per-key running event count on the Spark 4 arbitrary-state API
   * (`transformWithState` + [[StatefulProcessor]]): one ValueState[Long]
   * per user in the RocksDB state store, updated once per micro-batch
-  * per key — O(users) state like the flatMapGroupsWithState
-  * sessionizer, but on the new typed-state surface (named state
-  * variables, per-state TTL, timers) that replaces GroupState for new
-  * code. TTLConfig.NONE here because the count is a forever-total; a
+  * per key — O(users) state on the typed-state surface (named state
+  * variables, per-state TTL, timers) that every graft stateful stream
+  * uses. TTLConfig.NONE here because the count is a forever-total; a
   * bounded-retention deployment passes a TTL and lets the store expire
   * idle users instead of growing without bound.
   */

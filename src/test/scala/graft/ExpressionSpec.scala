@@ -152,27 +152,6 @@ class ExpressionSpec extends SparkSpec {
       && got.getDouble(2) == -1.0, s"$got")
   }
 
-  test("native simhash64 equals the HOF formulation (same hash, seed 42)") {
-    val hofSimhash =
-      """aggregate(
-           transform(
-             aggregate(transform(tok, t -> xxhash64(t)),
-               array_repeat(cast(0 as bigint), 64),
-               (acc, h) -> transform(acc,
-                 (v, i) -> v + IF((shiftright(h, i) & 1) = 1,
-                                  cast(1 as bigint), cast(-1 as bigint)))),
-             (v, i) -> IF(v > 0, shiftleft(cast(1 as bigint), i),
-                          cast(0 as bigint))),
-           cast(0 as bigint),
-           (a, x) -> a + x)"""
-    val docs = graft.queries.Dedup.withTok(
-      Tables.load(spark, sf, "documents").limit(50))
-    val diff = docs
-      .select(expr("simhash64(tok)").as("native"), expr(hofSimhash).as("ref"))
-      .filter($"native" =!= $"ref")
-    assert(diff.count() == 0, "native simhash must equal the HOF fold")
-  }
-
   test("mix61: exact residues mod M61 under ANSI mode (BigInt reference)") {
     assert(spark.conf.get("spark.sql.ansi.enabled") == "true",
       "this test must run under ANSI mode — the whole point of mix61")
@@ -290,7 +269,6 @@ class ExpressionSpec extends SparkSpec {
         .toDF("a", "b", "tok", "xs", "ys", "img", "smp")
         .selectExpr(
           "cosine_sim(a, b) AS c1",
-          "simhash64(tok) AS c2",
           "simhash_md5(tok) AS c3",
           "hash60(tok[0]) AS c4",
           "mix61(42L, 7L, 9L) AS c5",
@@ -347,7 +325,6 @@ class ExpressionSpec extends SparkSpec {
         .toDF("a", "b", "tok", "xs", "ys", "img", "smp")
         .selectExpr(
           "cosine_sim(a, b) AS c1",
-          "simhash64(tok) AS c2",
           "simhash_md5(tok) AS c3",
           "hash60(tok[0]) AS c4",
           "mix61(42L, 7L, 9L) AS c5",
@@ -455,7 +432,7 @@ class ExpressionSpec extends SparkSpec {
     // pin the full set GraftExtensions injects, so adding a function
     // without listing it fails a test
     assert(GraftFunctions.all.map(_._1).toSet == Set("cosine_sim",
-      "simhash64", "simhash_md5", "hash60", "mix61", "shingles3",
+      "simhash_md5", "hash60", "mix61", "shingles3",
       "minhash_bands", "pair_combos", "bloom_might_contain",
       "sorted_intersect_count", "jl_project", "dhash64", "audiofp64",
       "dot128", "bloom_agg_1m", "img_resize", "img_flip", "img_rotate",

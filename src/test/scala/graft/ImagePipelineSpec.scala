@@ -1105,7 +1105,7 @@ class ImagePipelineSpec extends SparkSpec {
       val base = blk * samplesPerBlock
       val sims = (0 until coefs.length).map(pi => pi -> simulate(base, pi))
       val (pi, (codes, recon, d0, _)) = sims.minBy(_._2._4)
-      for (c <- 0 until ch) data.write(pi)
+      for (_ <- 0 until ch) data.write(pi)
       for (c <- 0 until ch) {
         data.write(d0(c) & 0xff); data.write((d0(c) >> 8) & 0xff)
       }
@@ -1245,14 +1245,23 @@ class ImagePipelineSpec extends SparkSpec {
   }
 
   private def flacStreamInfo(w: FlacW, rate: Int, chans: Int,
-      bps: Int): Unit = {
+      bps: Int, last: Boolean = true): Unit = {
     "fLaC".foreach(c => w.bits(c.toLong, 8))
-    w.bit(1); w.bits(0, 7); w.bits(34, 24) // last block, STREAMINFO
+    w.bit(if (last) 1 else 0); w.bits(0, 7); w.bits(34, 24) // STREAMINFO
     w.bits(4096, 16); w.bits(4096, 16)     // min/max block size
     w.bits(0, 24); w.bits(0, 24)           // min/max frame size unknown
     w.bits(rate.toLong, 20); w.bits(chans - 1L, 3); w.bits(bps - 1L, 5)
     w.bits(0, 36)                          // total samples unknown
     (0 until 16).foreach(_ => w.bits(0, 8)) // md5 unverified
+  }
+
+  /** A metadata block after STREAMINFO: `btype` 1 = PADDING,
+    * 4 = VORBIS_COMMENT. */
+  private def flacMetaBlock(w: FlacW, btype: Int, payload: Array[Byte],
+      last: Boolean): Unit = {
+    w.bit(if (last) 1 else 0); w.bits(btype.toLong, 7)
+    w.bits(payload.length.toLong, 24)
+    payload.foreach(x => w.bits(x & 0xffL, 8))
   }
 
   private def flacFrameHeader(w: FlacW, blockSize: Int,
@@ -1340,6 +1349,46 @@ class ImagePipelineSpec extends SparkSpec {
     // the default codec chain picks FLAC up without any WAV fallback
     val feats = MediaCodec.Jvm.audioFeatures(w.toBytes, 4)
     assert(feats.exists(_.length == 4))
+  }
+
+  test("multimodal: FLAC decode steps over VORBIS_COMMENT and PADDING") {
+    // real encoders write STREAMINFO, then VORBIS_COMMENT (the vendor
+    // string) and usually PADDING: the frames after them must decode to
+    // the same samples as behind a STREAMINFO-only header
+    val bs = 16
+    val ramp = Array.tabulate(bs)(i => 1500L * i - 9000L)
+    val frames = new FlacW
+    flacFrameHeader(frames, bs, 0)
+    frames.bit(0); frames.bits(1, 6); frames.bit(0) // VERBATIM
+    ramp.foreach(v => frames.bits(v & 0xffff, 16))
+    frames.align(); frames.bits(0, 16)
+    flacFrameHeader(frames, bs, 0)
+    frames.bit(0); frames.bits(0, 6); frames.bit(0) // CONSTANT -700
+    frames.bits(-700L & 0xffff, 16)
+    frames.align(); frames.bits(0, 16)
+    val body = frames.toBytes
+
+    val bare = new FlacW
+    flacStreamInfo(bare, 8000, 1, 16)
+    val tagged = new FlacW
+    flacStreamInfo(tagged, 8000, 1, 16, last = false)
+    def le32(v: Int) = Array.tabulate[Byte](4)(i => (v >> (8 * i)).toByte)
+    val vendor = "reference libFLAC 1.4.3 20230623".getBytes("UTF-8")
+    flacMetaBlock(tagged, 4, le32(vendor.length) ++ vendor ++ le32(0),
+      last = false)
+    flacMetaBlock(tagged, 1, new Array[Byte](8), last = true)
+
+    val (rate, mono) = graft.pipeline.Flac.decode(bare.toBytes ++ body).get
+    assert(rate == 8000f &&
+      mono.sameElements((ramp ++ Array.fill(bs)(-700L)).map(_ / 32768.0)))
+    val full = tagged.toBytes ++ body
+    val got = graft.pipeline.Flac.decode(full)
+    assert(got.isDefined, "metadata blocks after STREAMINFO must not " +
+      "reject the stream")
+    assert(got.get._1 == rate && got.get._2.sameElements(mono))
+    // probe and decode agree on the same bytes
+    assert(graft.pipeline.MediaProbe.probe(full).isDefined)
+    assert(MediaCodec.Jvm.audioFeatures(full, 4).exists(_.length == 4))
   }
 
   test("multimodal: REAL wav decode -> per-segment RMS energies") {

@@ -199,45 +199,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("stateful flatMapGroupsWithState sessions match batch q31 rows") {
-    val events = graft.streaming.StreamingWindows.eventsStream(spark, sf)
-    val sess = graft.streaming.StatefulSessions.sessionize(spark, events)
-    val q = StreamingWindows.runToMemory(sess.toDF(), "fmgws", mode = "append")
-    try {
-      val got = spark.table("fmgws").collect().toSet
-      val batch = batchRows("q31_session_window")
-      assert(got.nonEmpty, "in-batch closed sessions must be emitted")
-      assert(got.subsetOf(batch),
-        "every emitted session must equal its batch q31 twin")
-      val users = spark.table("fmgws").select("user_id").distinct().count()
-      assert(got.size >= batch.size - users,
-        s"only each user's open tail session may be unemitted " +
-          s"(got ${got.size} of ${batch.size}, $users users)")
-    } finally q.stop()
-  }
-
-  test("stateful sessions: same-batch stragglers merge with each other") {
-    // Two events older than the open session's merge window but within
-    // gap of each other must emit as ONE session, and the in-window
-    // event must extend the open session — pinning the interval-merge
-    // upgrade over the old emit-each-straggler-standalone behavior.
-    import graft.streaming.StatefulSessions.{Ev, OpenSession, sessionFn}
-    val mi = 60L * 1000000L // one minute in micros
-    def ev(m: Long) = Ev(7L, new java.sql.Timestamp(m * 60L * 1000L))
-    val state = org.apache.spark.sql.streaming.TestGroupState.create[OpenSession](
-      org.apache.spark.api.java.Optional.of(
-        OpenSession(100 * mi, 100 * mi, 1)),
-      org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout,
-      0L, org.apache.spark.api.java.Optional.of(0L), hasTimedOut = false)
-    val out = sessionFn(30 * mi)(7L, Iterator(ev(110), ev(10), ev(20)), state)
-      .toList
-    assert(out.map(s => (s.sstart_us, s.n_events, s.dur_us)) ==
-      List((10 * mi, 2L, 10 * mi)),
-      s"stragglers at 10' and 20' must merge into one emitted session: $out")
-    assert(state.get == OpenSession(100 * mi, 110 * mi, 2),
-      "the in-window event must extend the open session in state")
-  }
-
   test("streaming parquet sink: checkpointed append lands finalized windows") {
     // the production path — writeStream to a parquet directory with a
     // checkpoint — not just the memory sink the parity tests use
@@ -763,9 +724,11 @@ class StreamingSpec extends SparkSpec {
   test("stateful sessions merge across MULTI-batch boundaries") {
     // VERDICT r8 item 7: the single-file parity test never exercises
     // cross-micro-batch state. Stage the events as THREE time-ordered
-    // files arriving one per trigger; sessions that straddle a file cut
-    // only come out right if the open-session state carries across
-    // micro-batches and the next batch's events merge into it. The cuts
+    // files arriving one per trigger and sessionize them on the exact
+    // session_window path (the StreamingWindows.session shape);
+    // sessions that straddle a file cut only come out right if the
+    // open-session state carries across micro-batches and the next
+    // batch's events merge into it. The cuts
     // are MIDPOINTS of two real batch sessions (evenly-spaced cuts
     // bisected zero sessions on the fixture — a 30-minute-gap session
     // is a tiny target in a two-week range), so straddling sessions
@@ -782,17 +745,19 @@ class StreamingSpec extends SparkSpec {
     }
     val dir = stageEventsAt(cuts)
     val q = StreamingWindows.runToMemory(
-      graft.streaming.StatefulSessions.sessionize(spark,
+      EventTime.sessionAgg(
         StreamingWindows.eventsStream(spark, dir.getAbsolutePath,
-          maxFilesPerTrigger = 1)).toDF(),
-      "fmgws_mb", mode = "append")
+          maxFilesPerTrigger = 1)
+          .withWatermark("ts", "10 minutes")
+          .dropDuplicates("user_id", "ts")),
+      "sess_mb", mode = "append")
     try {
-      val got = spark.table("fmgws_mb").collect().toSet
+      val got = spark.table("sess_mb").collect().toSet
       val batch = batchRows("q31_session_window")
       assert(got.nonEmpty, "closed sessions must be emitted")
       assert(got.subsetOf(batch),
         "every emitted session must equal its batch q31 twin")
-      val users = spark.table("fmgws_mb").select("user_id")
+      val users = spark.table("sess_mb").select("user_id")
         .distinct().count()
       assert(got.size >= batch.size - users,
         s"only each user's open tail session may be unemitted " +
@@ -1462,6 +1427,70 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       assert(spark.table("t_empty_n").count() > 0,
         "windows must appear once the first nanos-layout file lands")
+    } finally q.stop()
+  }
+
+  test("a real TIMESTAMP(NANOS) events file reads ts as TimestampType " +
+      "in Tables.load and eventsStream") {
+    // Spark cannot write the nanos layout, so parquet-mr's example
+    // writer makes the file: ts is INT64 TIMESTAMP(NANOS,
+    // isAdjustedToUTC=false), as in the older fixture generations
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{
+      BINARY, DOUBLE, INT64}
+    import org.apache.spark.sql.types.{LongType, TimestampType}
+    val schema = Types.buildMessage()
+      .required(INT64).named("event_id")
+      .required(INT64).as(LogicalTypeAnnotation.timestampType(false,
+        LogicalTypeAnnotation.TimeUnit.NANOS)).named("ts")
+      .required(INT64).named("user_id")
+      .required(BINARY).as(LogicalTypeAnnotation.stringType())
+        .named("event_type")
+      .required(DOUBLE).named("value")
+      .optional(BINARY).as(LogicalTypeAnnotation.stringType())
+        .named("props")
+      .named("events")
+    val instants = Seq(
+      java.time.Instant.parse("2024-03-10T01:59:59.123456Z"),
+      java.time.Instant.parse("2024-03-10T02:00:00Z"),
+      java.time.Instant.parse("1999-12-31T23:59:59.999999Z"))
+    val dir = tempDir("graft_nanos")
+    val writer = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(
+        dir.resolve("events.parquet").toUri))
+      .withType(schema)
+      .withConf(spark.sessionState.newHadoopConf())
+      .build()
+    try {
+      val groups = new SimpleGroupFactory(schema)
+      instants.zipWithIndex.foreach { case (t, i) =>
+        writer.write(groups.newGroup()
+          .append("event_id", i.toLong)
+          .append("ts", t.getEpochSecond * 1000000000L + t.getNano)
+          .append("user_id", 7L)
+          .append("event_type", "click")
+          .append("value", 1.5))
+      }
+    } finally writer.close()
+    // the file really is the nanos layout: Spark sees a nanos long
+    assert(spark.read.parquet(dir.toString).schema("ts").dataType == LongType)
+
+    def instantsOf(rows: Array[Row]): Seq[java.time.Instant] =
+      rows.sortBy(_.getLong(0)).map(_.getTimestamp(1).toInstant).toSeq
+    val batch = graft.Tables.load(spark, dir.toString, "events")
+    assert(batch.schema("ts").dataType == TimestampType)
+    assert(instantsOf(batch.select("event_id", "ts").collect()) == instants)
+
+    val stream = StreamingWindows.eventsStream(spark, dir.toString)
+    assert(stream.schema("ts").dataType == TimestampType)
+    val q = StreamingWindows.runToMemory(stream.select("event_id", "ts"),
+      "nanos_stream")
+    try {
+      val drained = spark.table("nanos_stream")
+      assert(drained.schema("ts").dataType == TimestampType)
+      assert(instantsOf(drained.collect()) == instants)
     } finally q.stop()
   }
 

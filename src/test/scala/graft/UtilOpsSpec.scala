@@ -1,11 +1,10 @@
 package graft
 
-import graft.functions.MinHashAggregator
 import graft.operators.Skew
 import graft.pipeline.{ImageOps, ImagePipeline, ImageRecord}
 import org.apache.spark.sql.functions._
 
-/** Specs for the auxiliary operators: image-format source, minhash
+/** Specs for the auxiliary operators: image-format source, quantile
   * sketch aggregator, salted aggregation.
   */
 class UtilOpsSpec extends SparkSpec {
@@ -89,65 +88,6 @@ class UtilOpsSpec extends SparkSpec {
       assert(got.size == want.size, at)
       got.zip(want).foreach { case (g, w) =>
         assert(g == w, s"$at: ${g._1} differs from Spark's ${w._1}") }
-    }
-  }
-
-  test("minhash sketch: deterministic, mergeable, jaccard estimate") {
-    val agg = new MinHashAggregator(32)
-    val t1 = Seq("a", "b", "c", "d")
-    val t2 = Seq("a", "b", "c", "e")
-    val s1 = agg.finish(agg.reduce(agg.zero, t1))
-    val s1b = agg.finish(agg.reduce(agg.zero, t1))
-    assert(s1 == s1b, "sketch is deterministic")
-    // mergeability: sketch(t1 half1 ++ half2) == merge(sketch(h1), sketch(h2))
-    val m = agg.finish(agg.merge(
-      agg.reduce(agg.zero, t1.take(2)), agg.reduce(agg.zero, t1.drop(2))))
-    assert(m == s1, "merge of partial sketches equals whole-set sketch")
-    val s2 = agg.finish(agg.reduce(agg.zero, t2))
-    val est = MinHashAggregator.estimateJaccard(s1, s2)
-    // true jaccard = 3/5 = 0.6; with 32 hashes expect est in (0.2, 1.0)
-    assert(est > 0.2 && est < 1.0, s"estimate $est implausible for j=0.6")
-    assert(MinHashAggregator.estimateJaccard(s1, s1) == 1.0)
-  }
-
-  test("minhash sketch as grouped aggregation over documents") {
-    val agg = new MinHashAggregator(16)
-    val docs = Seq((1L, Seq("x", "y", "z")), (1L, Seq("w")),
-      (2L, Seq("x", "y", "z", "w"))).toDS()
-    val sk = docs.groupByKey(_._1).mapValues(_._2)
-      .agg(agg.toColumn.name("sketch")).collect().toMap
-    // doc 1 (two partial rows) and doc 2 hold the same token set
-    assert(sk(1L) == sk(2L), "same token set across rows -> same sketch")
-  }
-
-  test("HLL sketch: merge law and accuracy within 3% at 10k distinct") {
-    val agg = new graft.functions.HllAggregator(12)
-    // accuracy on 10k distinct values
-    val reg = (0 until 10000).foldLeft(agg.zero)((r, i) => agg.reduce(r, s"v$i"))
-    val est = agg.finish(reg)
-    assert(math.abs(est - 10000.0) / 10000.0 < 0.03, s"estimate $est")
-    // merge = union: two overlapping halves estimate the union size
-    val a = (0 until 6000).foldLeft(agg.zero)((r, i) => agg.reduce(r, s"v$i"))
-    val b = (4000 until 10000).foldLeft(agg.zero)((r, i) => agg.reduce(r, s"v$i"))
-    val u = agg.finish(agg.merge(a, b))
-    assert(math.abs(u - 10000.0) / 10000.0 < 0.03, s"union estimate $u")
-  }
-
-  test("HLL sketch as a grouped Spark aggregation vs exact counts") {
-    val agg = new graft.functions.HllAggregator(12)
-    val li = Tables.load(spark, sf, "lineitem")
-    import org.apache.spark.sql.functions.countDistinct
-    val exact = li.groupBy("l_returnflag")
-      .agg(countDistinct($"l_partkey").as("d")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val est = li.select($"l_returnflag", $"l_partkey".cast("string").as("v"))
-      .as[(String, String)]
-      .groupByKey(_._1).mapValues(_._2)
-      .agg(agg.toColumn.name("est")).collect()
-      .map { case (k, v) => k -> v }.toMap
-    exact.foreach { case (k, ex) =>
-      assert(math.abs(est(k) - ex.toDouble) / ex < 0.05,
-        s"flag $k: est ${est(k)} vs exact $ex")
     }
   }
 
