@@ -8,7 +8,9 @@ import graft.functions.GraftFunctions
 /** Session-extensions installer, and the only way graft installs into
   * a session: makes graft's SQL functions (the native expressions,
   * q93's `bloom_agg_1m` and the `img_*` image UDFs) resolvable, graft's
-  * custom physical operators plannable and its optimizer rules active,
+  * custom physical operators plannable and its optimizer rules active
+  * (TopOnePerKeyRule and RangeJoinRule in the optimizer, SmallSortRule
+  * in AQE's runtime optimizer),
   * on any session built with `spark.sql.extensions=graft.GraftExtensions`
   * (or `.withExtensions(new GraftExtensions)`, as [[GraftSession.builder]]
   * does). A session built without it resolves none of graft's SQL
@@ -24,5 +26,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     e.injectOptimizerRule(_ => graft.plans.TopOnePerKeyRule)
     e.injectOptimizerRule(_ => graft.plans.RangeJoinRule)
+    e.injectRuntimeOptimizerRule(_ => graft.plans.SmallSortRule)
   }
 }

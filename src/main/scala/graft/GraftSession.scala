@@ -8,8 +8,10 @@ import org.apache.spark.sql.SparkSession
   * shared session all build through [[builder]]:
   *
   *  - GraftExtensions installed: all of graft's SQL functions, the
-  *    as-of join planner strategy, and the TopOnePerKey and RangeJoin
-  *    optimizer rules;
+  *    as-of join planner strategy, the TopOnePerKey and RangeJoin
+  *    optimizer rules, and SmallSortRule, the AQE runtime rule that
+  *    sorts a small, already-coalesced result in place instead of
+  *    range-partitioning it;
   *  - UTC session timezone — every date_format/window oracle assumes it;
   *  - `spark.sql.legacy.parquet.nanosAsLong`: the older TIMESTAMP(NANOS)
   *    `events.ts` layout reads as a long (which `Tables.load` and

@@ -101,7 +101,10 @@ object Tables {
   private[graft] def tsToTimestamp(df: DataFrame): DataFrame =
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
-        df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+        // floor division: `div` truncates toward zero, which would put a
+        // pre-1970 instant with sub-µs digits 1 µs late
+        df.withColumn("ts",
+          expr("timestamp_micros(ts div 1000 - if(ts % 1000 < 0, 1, 0))"))
       case org.apache.spark.sql.types.TimestampType => df
       case _ => df.withColumn("ts", col("ts").cast("timestamp"))
     }

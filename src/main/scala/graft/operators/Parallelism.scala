@@ -15,13 +15,20 @@ import org.apache.spark.sql.{Column, DataFrame}
   * [[widen]] inserts one hash exchange ONLY when the planned input
   * parallelism is materially below the session's shuffle parallelism, so
   * the big-data path stays shuffle-free while the small-file path gets
-  * its cores back. The check reads the planned partition count (file
-  * listing — no job runs) at query-construction time.
+  * its cores back. The check reads the planned partition count at
+  * query-construction time. Over a file scan that is a file listing and
+  * no job runs; over an input with an exchange below it, `df.rdd` on the
+  * adaptive plan runs that input's query stages (q45: the `widen` inside
+  * `jaccardPairsOf` sits above a window's exchange and starts a job,
+  * then the query runs that shuffle again). ROADMAP item 1 moves the
+  * decision to planning time.
   */
 object Parallelism {
 
   /** Repartition `df` by `key` to the session's shuffle parallelism iff
-    * its planned partition count is below half of it. Hash partitioning
+    * its planned partition count is below half of it (read with
+    * `df.rdd`, which runs a job when `df` has an exchange below it; see
+    * the object's note). Hash partitioning
     * on a provided key (never round-robin) keeps the result
     * deterministic under retries and across runs.
     */

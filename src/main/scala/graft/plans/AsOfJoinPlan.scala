@@ -4,7 +4,8 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, BindReferences, Expression, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, Project, Statistics}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
@@ -91,6 +92,18 @@ case class AsOfJoinNode(left: LogicalPlan, right: LogicalPlan,
 
   override def output: Seq[Attribute] =
     left.output ++ right.output.map(_.withNullability(true))
+
+  /** Exactly one output row per left row, so the left side's rows at
+    * this node's row width, in place of Spark's product-of-children
+    * default for a binary node it does not know. */
+  override def stats: Statistics = {
+    val l = left.stats
+    val rows = l.rowCount.getOrElse(
+      l.sizeInBytes / EstimationUtils.getSizePerRow(left.output))
+    Statistics(sizeInBytes = (rows * EstimationUtils.getSizePerRow(output)).max(1),
+      rowCount = l.rowCount)
+  }
+
   override protected def withNewChildrenInternal(
       newLeft: LogicalPlan, newRight: LogicalPlan): AsOfJoinNode =
     copy(left = newLeft, right = newRight)

@@ -75,6 +75,20 @@ class ContractSpec extends SparkSpec {
     * require clean (possibly empty) results. Wrong-but-defined output
     * is out of scope (the oracle's job on the clean domain); THROWING
     * is the bug these sweeps exist to catch. */
+  /** Waits until no Spark job is running, so a job a query left behind
+    * neither reads the sweep's tables after they are deleted nor
+    * overlaps the next key; names the key that left one on stderr. */
+  private def awaitNoActiveJob(key: String): Unit = {
+    val tracker = spark.sparkContext.statusTracker
+    if (tracker.getActiveJobIds.nonEmpty) {
+      System.err.println(s"[ContractSpec] $key left job(s) " +
+        tracker.getActiveJobIds.mkString(",") + " running after its query")
+      val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
+      while (tracker.getActiveJobIds.nonEmpty && System.nanoTime() < deadline)
+        Thread.sleep(20)
+    }
+  }
+
   private def totalitySweep(label: String)(
       transform: org.apache.spark.sql.DataFrame
         => org.apache.spark.sql.DataFrame): Unit = {
@@ -96,6 +110,7 @@ class ContractSpec extends SparkSpec {
           Some(s"$k: ${e.getClass.getSimpleName} " +
             String.valueOf(e.getMessage).linesIterator.take(1).mkString)
         }
+        finally awaitNoActiveJob(s"$label/$k")
       }
     assert(failures.isEmpty,
       s"${failures.size} queries throw on $label tables:\n" +

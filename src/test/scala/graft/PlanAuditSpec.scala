@@ -134,7 +134,7 @@ class PlanAuditSpec extends SparkSpec {
     }
     assert(diffs.isEmpty,
       "physical-plan digest drift — if intentional, paste the rows below " +
-        "into PlanDigests.scala AND note the change in IMPLEMENTATION.md:\n" +
+        "into PlanDigests.scala AND note the change in CHANGES.md:\n" +
         diffs.mkString("\n"))
   }
 }

@@ -12,8 +12,13 @@ package graft
   * driver bench. If a change is INTENTIONAL: regenerate the entry
   * (`runMain graft.Explain <query> -digest` prints the row in this
   * setting, or copy the actual from the test failure) AND record what
-  * changed and why in IMPLEMENTATION.md — the digest is a tripwire, not
-  * a lock.
+  * changed and why, with the old and new row, in CHANGES.md (ROADMAP
+  * keeps the per-PR record there) — the digest is a tripwire, not a
+  * lock.
+  *
+  * Rows that show `Coalesce x1` where an `Exchange` and an
+  * `AQEShuffleRead` used to be: SmallSortRule sorts the small final
+  * ordering in place instead of range-partitioning it.
   *
   * Queries whose expensive work hides behind a checkpoint barrier
   * (q67/q102: the CC loop; parts of q103/q104) pin only the visible
@@ -37,7 +42,7 @@ object PlanDigests {
     // r9: one Window operator = one shuffle for all three interval
     // RANGE frames (they share a window ordering)
     "q136_range_frames" ->
-      "AQEShuffleRead x2 | ColumnarToRow x1 | Exchange x2 | Filter x1 | Project x3 | Scan parquet x1 | Sort x2 | Window x1",
+      "AQEShuffleRead x1 | Coalesce x1 | ColumnarToRow x1 | Exchange x1 | Filter x1 | Project x3 | Scan parquet x1 | Sort x2 | Window x1",
     // r9: digest-only full outer join + one body equi-join
     "q137_merge_apply" ->
       "AQEShuffleRead x3 | BroadcastExchange x1 | BroadcastHashJoin x1 | ColumnarToRow x3 | Exchange x3 | Filter x4 | Project x5 | Scan parquet x3 | Sort x3 | SortMergeJoin x1",
@@ -94,7 +99,7 @@ object PlanDigests {
     // fixture scale; at 100 TB the same plan degrades to a shuffle
     // join instead of a driver OOM)
     "q142_bpe_encode" ->
-      "AQEShuffleRead x4 | BroadcastExchange x1 | BroadcastHashJoin x1 | ColumnarToRow x1 | Exchange x4 | Generate x1 | HashAggregate x4 | Project x2 | Scan ExistingRDD x1 | Scan parquet x1 | Sort x1",
+      "AQEShuffleRead x3 | BroadcastExchange x1 | BroadcastHashJoin x1 | Coalesce x1 | ColumnarToRow x1 | Exchange x3 | Generate x1 | HashAggregate x4 | Project x2 | Scan ExistingRDD x1 | Scan parquet x1 | Sort x1",
     // r12: packing composition — train+encode hide behind the totals
     // checkpoint (Scan ExistingRDD x2 = PrefixAgg's two consumers of
     // the materialized per-doc table; a parquet scan reappearing here
@@ -102,11 +107,11 @@ object PlanDigests {
     // BroadcastHashJoin is the block-offset join-back, the two Windows
     // are the block carry-in + block-local running sums
     "q143_bpe_packing" ->
-      "AQEShuffleRead x4 | BroadcastExchange x1 | BroadcastHashJoin x1 | Exchange x5 | Filter x2 | HashAggregate x4 | Project x5 | Scan ExistingRDD x2 | Sort x3 | Window x2",
+      "AQEShuffleRead x3 | BroadcastExchange x1 | BroadcastHashJoin x1 | Coalesce x1 | Exchange x4 | Filter x2 | HashAggregate x4 | Project x5 | Scan ExistingRDD x2 | Sort x3 | Window x2",
     "q102_cluster_canon" ->
-      "AQEShuffleRead x4 | BroadcastExchange x1 | BroadcastHashJoin x1 | ColumnarToRow x1 | Exchange x4 | Project x3 | Scan ExistingRDD x1 | Scan parquet x1 | Sort x3 | SortAggregate x2",
+      "AQEShuffleRead x3 | BroadcastExchange x1 | BroadcastHashJoin x1 | Coalesce x1 | ColumnarToRow x1 | Exchange x3 | Project x3 | Scan ExistingRDD x1 | Scan parquet x1 | Sort x3 | SortAggregate x2",
     "q103_prefix_jaccard" ->
-      "AQEShuffleRead x2 | BroadcastExchange x2 | BroadcastHashJoin x3 | Exchange x2 | Filter x3 | Generate x2 | HashAggregate x2 | Project x9 | ReusedExchange x1 | Scan ExistingRDD x3 | Sort x1",
+      "AQEShuffleRead x1 | BroadcastExchange x2 | BroadcastHashJoin x3 | Coalesce x1 | Exchange x1 | Filter x3 | Generate x2 | HashAggregate x2 | Project x9 | ReusedExchange x1 | Scan ExistingRDD x3 | Sort x1",
     // same multiset as q103 by construction (prefix x full instead of
     // prefix x prefix, pair-dedup HashAggregate instead of the final
     // distinct) — a drift here means the candidate dedup or the shared
@@ -123,9 +128,9 @@ object PlanDigests {
     // into the bucketed twin's shape: Generate + BroadcastHashJoin, no
     // BroadcastNestedLoopJoin
     "q12_range_join" ->
-      "AQEShuffleRead x3 | BroadcastExchange x1 | BroadcastHashJoin x1 | ColumnarToRow x2 | Exchange x4 | Filter x3 | Generate x1 | HashAggregate x4 | Project x2 | Scan parquet x2 | Sort x1",
+      "AQEShuffleRead x2 | BroadcastExchange x1 | BroadcastHashJoin x1 | Coalesce x1 | ColumnarToRow x2 | Exchange x3 | Filter x3 | Generate x1 | HashAggregate x4 | Project x2 | Scan parquet x2 | Sort x1",
     "q12_range_join_bucketed" ->
-      "AQEShuffleRead x3 | BroadcastExchange x1 | BroadcastHashJoin x1 | ColumnarToRow x2 | Exchange x4 | Filter x3 | Generate x1 | HashAggregate x4 | Project x3 | Scan parquet x2 | Sort x1",
+      "AQEShuffleRead x2 | BroadcastExchange x1 | BroadcastHashJoin x1 | Coalesce x1 | ColumnarToRow x2 | Exchange x3 | Filter x3 | Generate x1 | HashAggregate x4 | Project x3 | Scan parquet x2 | Sort x1",
     "q37_ngram_jaccard" ->
       "AQEShuffleRead x5 | BroadcastExchange x1 | BroadcastHashJoin x2 | ColumnarToRow x1 | Exchange x5 | Filter x3 | Generate x3 | HashAggregate x4 | ObjectHashAggregate x3 | Project x7 | ReusedExchange x2 | Scan parquet x1 | Sort x1",
     // r9: jaccardPairsOf no longer force-broadcasts the per-doc counts
@@ -134,7 +139,7 @@ object PlanDigests {
     // unchanged) but plans the agg as shuffle-then-broadcast (+1
     // BroadcastExchange/HashAggregate/AQEShuffleRead vs the forced hint)
     "q45_curation" ->
-      "AQEShuffleRead x9 | BroadcastExchange x3 | BroadcastHashJoin x3 | ColumnarToRow x2 | Exchange x8 | Filter x7 | Generate x3 | HashAggregate x7 | ObjectHashAggregate x3 | Project x11 | ReusedExchange x2 | Scan parquet x2 | Sort x5 | Window x2 | WindowGroupLimit x4",
+      "AQEShuffleRead x8 | BroadcastExchange x3 | BroadcastHashJoin x3 | Coalesce x1 | ColumnarToRow x2 | Exchange x7 | Filter x7 | Generate x3 | HashAggregate x7 | ObjectHashAggregate x3 | Project x11 | ReusedExchange x2 | Scan parquet x2 | Sort x5 | Window x2 | WindowGroupLimit x4",
     "q67_dedup_clusters" ->
       "AQEShuffleRead x1 | Exchange x1 | Project x1 | Scan ExistingRDD x1 | Sort x1",
     "q73_incremental_dedup" ->
@@ -143,7 +148,7 @@ object PlanDigests {
     // and the binned scan (NULL prices would inflate Spark's running
     // count but not the oracle's cume_dist)
     "q88_equidepth_hist" ->
-      "AQEShuffleRead x3 | BroadcastExchange x1 | BroadcastNestedLoopJoin x1 | ColumnarToRow x2 | Exchange x4 | Filter x2 | HashAggregate x6 | Project x2 | Scan parquet x2 | Sort x2 | Window x2",
+      "AQEShuffleRead x2 | BroadcastExchange x1 | BroadcastNestedLoopJoin x1 | Coalesce x1 | ColumnarToRow x2 | Exchange x3 | Filter x2 | HashAggregate x6 | Project x2 | Scan parquet x2 | Sort x2 | Window x2",
     // r8: the pair pipelines hide behind Materialize; the visible
     // tail is the count/semi-join summary. r11: +1 materialized arm
     // (the stratum exact recompute — VERDICT r10 task 4), so two more
@@ -175,7 +180,7 @@ object PlanDigests {
     // q126: the tertile cutpoints ride ONE checkpointed score table
     // (Scan ExistingRDD x2) — a third scan means the share broke
     "q126_perplexity_buckets" ->
-      "AQEShuffleRead x3 | BroadcastExchange x1 | BroadcastNestedLoopJoin x1 | Exchange x4 | HashAggregate x6 | Project x4 | Scan ExistingRDD x2 | Sort x2 | Window x2",
+      "AQEShuffleRead x2 | BroadcastExchange x1 | BroadcastNestedLoopJoin x1 | Coalesce x1 | Exchange x3 | HashAggregate x6 | Project x4 | Scan ExistingRDD x2 | Sort x2 | Window x2",
     // q122: both arms cut to 20 by TakeOrderedAndProject BEFORE any
     // Window (the two Window ops rank 20-row inputs); the BM25 tf table
     // is the shared checkpoint (Scan ExistingRDD x2)

@@ -20,11 +20,14 @@ trait SparkSpec extends AnyFunSuite with TempDirs {
   def rows(name: String): Long =
     SparkEntry.queries(name)(spark, sf).count()
 
-  /** Runs `body` with `rule` excluded from the optimizer: the rule-off
-    * baseline of a rule GraftExtensions installs. */
+  /** Runs `body` with `rule` excluded from the optimizer and from AQE's
+    * runtime optimizer (each reads its own `excludedRules` conf): the
+    * rule-off baseline of a rule GraftExtensions installs. */
   def withoutRule[A](rule: Rule[_])(body: => A): A = {
-    spark.conf.set(SQLConf.OPTIMIZER_EXCLUDED_RULES.key, rule.ruleName)
+    val keys = Seq(SQLConf.OPTIMIZER_EXCLUDED_RULES.key,
+      SQLConf.ADAPTIVE_OPTIMIZER_EXCLUDED_RULES.key)
+    keys.foreach(spark.conf.set(_, rule.ruleName))
     try body
-    finally spark.conf.unset(SQLConf.OPTIMIZER_EXCLUDED_RULES.key)
+    finally keys.foreach(spark.conf.unset)
   }
 }

@@ -1494,6 +1494,22 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("nanos-long ts floors to the microsecond, before 1970 too") {
+    // tsToTimestamp is the one conversion Tables.load and eventsStream
+    // share; a LongType ts holds epoch nanoseconds
+    import spark.implicits._
+    val t2024 = java.time.Instant.parse("2024-03-10T01:59:59.123456Z")
+    val nanos = Seq(-1L, -1000L, -1001L, 1999L,
+      t2024.getEpochSecond * 1000000000L + t2024.getNano)
+    val got = graft.Tables.tsToTimestamp(nanos.toDF("ts"))
+      .selectExpr("unix_micros(ts)").as[Long].collect().toSeq
+    assert(got == Seq(-1L, -1L, -2L, 1L,
+      t2024.getEpochSecond * 1000000L + t2024.getNano / 1000))
+    val first = graft.Tables.tsToTimestamp(Seq(-1L).toDF("ts"))
+      .head().getTimestamp(0).toInstant
+    assert(first == java.time.Instant.parse("1969-12-31T23:59:59.999999Z"))
+  }
+
   test("a NONEXISTENT source path fails fast instead of silently " +
       "starting a forever-empty stream") {
     // the empty-dir fallback is only for "directory exists, no file
